@@ -44,32 +44,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+LOOKBACK = "INTERVAL 1 DAY"
+
+
 def lookback_filter(
     source: DataFrame,
     target: DataFrame | None,
-    source_col: str,
-    target_col: str | None = None,
-    lookback: str = "INTERVAL 1 DAY",
+    col: str,
     strict: bool = False,
 ) -> DataFrame:
     """Apply the incremental sliding-window predicate.
 
-    ``source_col >= coalesce(max(target.target_col) - lookback,
-    TIMESTAMP '1900-01-01')`` — reference P8. The scalar subquery is
-    evaluated eagerly (1-row agg collect) so the main plan gets a simple
-    pushed-down literal comparison instead of a subquery join.
-    ``strict`` uses ``>`` (reference fact_orders.sql:19 uses ``>``).
+    ``source.col >= coalesce(max(target.col) - LOOKBACK,
+    TIMESTAMP '1900-01-01')`` — reference P8. ``source`` is a model's
+    output, so the same column names the rows on both sides. The scalar
+    subquery is evaluated eagerly (1-row agg collect) so the main plan gets
+    a simple literal comparison instead of a subquery join. ``strict`` uses
+    ``>`` (reference fact_orders.sql:19 uses ``>``).
     """
     if target is None:
         return source
-    target_col = target_col or source_col
-    row = target.agg(F.max(target_col).alias("mx")).collect()[0]
+    row = target.agg(F.max(col).alias("mx")).collect()[0]
     if row["mx"] is None:
         return source
     bound = target.sparkSession.sql(
-        f"SELECT TIMESTAMP '{row['mx']}' - {lookback} AS b"
+        f"SELECT TIMESTAMP '{row['mx']}' - {LOOKBACK} AS b"
     ).collect()[0]["b"]
-    cmp = F.col(source_col) > F.lit(bound) if strict else F.col(source_col) >= F.lit(bound)
+    cmp = F.col(col) > F.lit(bound) if strict else F.col(col) >= F.lit(bound)
     return source.filter(cmp)
 
 

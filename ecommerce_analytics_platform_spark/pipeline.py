@@ -31,7 +31,6 @@ def run_pipeline(
     spark: SparkSession,
     data_lake: str,
     full_refresh: bool = False,
-    streaming_clickstream: bool = True,
 ) -> dict:
     """raw NDJSON under <data_lake>/raw/{clickstream,orders} → gold marts.
 
@@ -50,16 +49,7 @@ def run_pipeline(
     wh = Warehouse(spark, os.path.join(data_lake, "warehouse"))
 
     # -- stage 1a: clickstream (streaming backfill)
-    if streaming_clickstream:
-        run_backfill(spark, raw_click, landing_click, checkpoint)
-    else:  # batch fallback — same transform, plain write
-        from ecommerce_analytics_platform_spark.sources.ndjson import (
-            enrich_clickstream,
-            read_clickstream_raw,
-        )
-
-        df = enrich_clickstream(read_clickstream_raw(spark, raw_click))
-        write_landing(df, landing_click, ["ingest_date"], mode="overwrite")
+    run_backfill(spark, raw_click, landing_click, checkpoint)
 
     # -- stage 1b: orders (batch)
     orders = enrich_orders(read_orders_raw(spark, raw_orders))

@@ -103,6 +103,18 @@ def stg_clickstream_sessions(stg_events: DataFrame) -> DataFrame:
     )
 
 
+SESSION_BUCKETS = 16
+
+
+def stg_clickstream_sessions_bucketed(stg_events: DataFrame) -> DataFrame:
+    """:func:`stg_clickstream_sessions` plus its storage bucket ``s_bucket``,
+    the layout batch and stream both merge into (a late event can move a
+    session's start date but never its bucket)."""
+    return stg_clickstream_sessions(stg_events).withColumn(
+        "s_bucket", F.pmod(F.hash("session_id"), F.lit(SESSION_BUCKETS))
+    )
+
+
 def stg_orders(bronze_orders: DataFrame) -> DataFrame:
     """Order dedup + per-array item_count / order_total_amount.
 

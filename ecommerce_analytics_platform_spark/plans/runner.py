@@ -40,16 +40,10 @@ class ModelSpec:
     builder: Callable[..., DataFrame]  # positional args = deps order
     materialized: str = "table"     # "table" | "incremental"
     unique_key: list[str] = field(default_factory=list)
-    # incremental predicate: source ts column (and optional differing target
-    # column), strict > vs >= — reference models vary (fact_orders uses >)
+    # incremental predicate on the model's output: ts column, strict > vs
+    # >= — reference models vary (fact_orders uses >)
     lookback_col: str | None = None
-    lookback_target_col: str | None = None
     lookback_strict: bool = False
-    # when set, the lookback filters THIS dep's DataFrame before building —
-    # needed when the predicate column doesn't survive the model's
-    # aggregation (reference stg_clickstream_sessions.sql:15-18 filters the
-    # source events CTE on event_ts, not the rollup output)
-    lookback_input: str | None = None
     partition_by: list[str] | None = None
 
 
@@ -58,14 +52,13 @@ MODELS: list[ModelSpec] = [
     ModelSpec(
         "staging.stg_clickstream_events", ["bronze.clickstream"], M.stg_clickstream_events,
         materialized="incremental", unique_key=["event_id"],
-        lookback_col="pipeline_ingested_at",
+        lookback_col="pipeline_ingested_at", partition_by=["event_date"],
     ),
     ModelSpec(
         "staging.stg_clickstream_sessions", ["staging.stg_clickstream_events"],
-        M.stg_clickstream_sessions,
+        M.stg_clickstream_sessions_bucketed,
         materialized="incremental", unique_key=["session_id"],
-        lookback_col="event_ts", lookback_target_col="session_end_ts",
-        lookback_input="staging.stg_clickstream_events",
+        lookback_col="session_end_ts", partition_by=["s_bucket"],
     ),
     ModelSpec(
         "staging.stg_orders", ["bronze.orders"], M.stg_orders,
@@ -144,6 +137,14 @@ def _toposort(specs: list[ModelSpec]) -> list[ModelSpec]:
     return done
 
 
+def merge_model(wh: Warehouse, name: str, df: DataFrame) -> None:
+    """delete+insert ``df`` into model ``name`` with its declared unique key
+    and partition layout — the merge the stream's micro-batches share with
+    the batch incremental run."""
+    spec = next(m for m in MODELS if m.name == name)
+    merge_delete_insert(wh.spark, wh.path(name), df, spec.unique_key, spec.partition_by)
+
+
 def run_models(
     wh: Warehouse,
     specs: list[ModelSpec] | None = None,
@@ -155,29 +156,23 @@ def run_models(
     ``select`` limits to the named models (deps must already exist —
     mirrors ``dbt run --select``). ``full_refresh`` rebuilds incrementals
     from scratch (reference dbt_runner.py:59-63 behavior for staging).
+
+    Incremental models are built from full inputs; the lookback then picks
+    output rows, so a picked session is rolled up from its full history.
     """
     specs = _toposort(specs or MODELS)
     if select:
         specs = [s for s in specs if s.name in select]
     counts: dict[str, int] = {}
     for s in specs:
-        inputs = [wh.read(d) for d in s.deps]
+        df = s.builder(*(wh.read(d) for d in s.deps))
         incremental = (
             s.materialized == "incremental" and not full_refresh and wh.exists(s.name)
         )
-        target = wh.read(s.name) if incremental else None
-        if incremental and s.lookback_col and s.lookback_input:
-            i = s.deps.index(s.lookback_input)
-            inputs[i] = lookback_filter(
-                inputs[i], target, s.lookback_col,
-                s.lookback_target_col, strict=s.lookback_strict,
-            )
-        df = s.builder(*inputs)
         if incremental:
-            if s.lookback_col and not s.lookback_input:
+            if s.lookback_col:
                 df = lookback_filter(
-                    df, target, s.lookback_col,
-                    s.lookback_target_col, strict=s.lookback_strict,
+                    df, wh.read(s.name), s.lookback_col, strict=s.lookback_strict
                 )
             merge_delete_insert(
                 wh.spark, wh.path(s.name), df, s.unique_key, s.partition_by

@@ -92,9 +92,11 @@ def write_landing(
 
 
 def read_landing(spark: SparkSession, path: str) -> DataFrame:
-    """Hive-partitioned parquet scan (reference S6) — partition columns
-    (ingest_date, batch_id) recovered automatically by Spark discovery."""
-    return spark.read.parquet(path)
+    """Hive-partitioned parquet scan (reference S6). Discovery infers
+    ``ingest_date`` as DATE; it is cast back to the ``yyyy-MM-dd`` string
+    ``enrich_*`` emit, so bronze has one type for it on batch and stream."""
+    df = spark.read.parquet(path)
+    return df.withColumn("ingest_date", F.col("ingest_date").cast("string"))
 
 
 def compact_landing(spark: SparkSession, path: str, partition_col: str = "ingest_date") -> int:

@@ -1,8 +1,9 @@
 """Streaming gold: one micro-batch loop drives the full gold layer —
 four metrics marts AND the four dimensions.
 
-Extends ``continuous_pipeline.start_continuous_silver`` (bronze append +
-silver merge) all the way to the reference's gold layer (SURVEY §3.3:
+Each micro-batch runs ``continuous_pipeline.land_and_merge_events`` (bronze
+append + silver events merge), then silver sessions and the reference's
+gold layer (SURVEY §3.3:
 metrics_daily_kpis / metrics_daily_funnel / metrics_user_lifecycle /
 metrics_product_performance_daily — dbt_project/models/marts/metrics/*.sql
 — plus dim_date / dim_users / dim_products / dim_session_context —
@@ -49,12 +50,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ecommerce_analytics_platform_spark.operators.incremental import merge_delete_insert
 from ecommerce_analytics_platform_spark.plans import models as M
+from ecommerce_analytics_platform_spark.plans.runner import merge_model
 from ecommerce_analytics_platform_spark.sources.manifest import ManifestTable
-from ecommerce_analytics_platform_spark.sources.ndjson import enrich_clickstream
 from ecommerce_analytics_platform_spark.sources.warehouse import Warehouse
-from ecommerce_analytics_platform_spark.streaming.ingest import read_clickstream_stream
+from ecommerce_analytics_platform_spark.streaming.continuous_pipeline import (
+    land_and_merge_events,
+    start_clickstream_stream,
+)
 
 GOLD_TABLES = (
     "metrics_daily_kpis",
@@ -152,17 +155,7 @@ def start_continuous_gold(
         return ManifestTable(spark, os.path.join(gold_root, name))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # -- bronze + silver events (same contract as start_continuous_silver)
-        landed = enrich_clickstream(batch_df, batch_id=batch_id)
-        wh.append(landed, "bronze.clickstream", partition_by=["ingest_date"])
-        silver_batch = M.stg_clickstream_events(landed)
-        merge_delete_insert(
-            spark,
-            wh.path("staging.stg_clickstream_events"),
-            silver_batch,
-            unique_key=["event_id"],
-            partition_by=["event_date"],
-        )
+        silver_batch = land_and_merge_events(wh, batch_df, batch_id)
         touched_sessions = silver_batch.select("session_id").distinct()
         if touched_sessions.limit(1).count() == 0:
             return  # nothing parseable in this batch
@@ -170,18 +163,12 @@ def start_continuous_gold(
         ev = wh.read("staging.stg_clickstream_events")
 
         # -- silver sessions: full-history rollup of touched sessions,
-        # merged by session_id into a hash-bucketed table (bucket is
-        # partition-stable per key; late events can't migrate a session)
+        # merged by session_id into the hash-bucketed table the batch
+        # runner also writes (late events can't migrate a session's bucket)
         touched_ev = ev.join(F.broadcast(touched_sessions), "session_id")
-        sess_batch = M.stg_clickstream_sessions(touched_ev).withColumn(
-            "s_bucket", F.pmod(F.hash("session_id"), F.lit(n_user_buckets))
-        )
-        merge_delete_insert(
-            spark,
-            wh.path("staging.stg_clickstream_sessions"),
-            sess_batch,
-            unique_key=["session_id"],
-            partition_by=["s_bucket"],
+        merge_model(
+            wh, "staging.stg_clickstream_sessions",
+            M.stg_clickstream_sessions_bucketed(touched_ev),
         )
         sessions = wh.read("staging.stg_clickstream_sessions").drop("s_bucket")
 
@@ -314,15 +301,7 @@ def start_continuous_gold(
                     txn_id=fp_txn,
                 )
 
-    stream = read_clickstream_stream(spark, raw_dir)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_clickstream_stream(spark, raw_dir, checkpoint_dir, process_batch, available_now)
 
 
 def _empty_orders(spark: SparkSession) -> DataFrame:

@@ -169,3 +169,83 @@ def test_source_freshness_contract(spark, data_lake, result):
     # a source that was never loaded is infinitely stale
     empty_wh = Warehouse(spark, str(data_lake / "warehouse_missing"))
     assert set(run_freshness(empty_wh, now=now).values()) == {"error"}
+
+
+def test_incremental_rerun_rebuilds_straddling_session(spark, tmp_path):
+    """A session with events on both sides of the lookback bound
+    (``max(session_end_ts) - 1 day``) is rebuilt from its full history by
+    the incremental run, so it equals a full rebuild — not a rollup of its
+    newer events only."""
+    import datetime
+
+    from ecommerce_analytics_platform_spark.plans.runner import run_models
+    from ecommerce_analytics_platform_spark.sources.ndjson import enrich_clickstream
+    from ecommerce_analytics_platform_spark.sources.schemas import CLICKSTREAM_RAW_SCHEMA
+    from ecommerce_analytics_platform_spark.sources.warehouse import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "warehouse"))
+    select = ["staging.stg_clickstream_events", "staging.stg_clickstream_sessions"]
+
+    def land(*events):
+        rows = [
+            {"event_id": eid, "event_type": "page_view", "user_id": "u1",
+             "session_id": sid, "event_time": ts, "version": "v1"}
+            for eid, sid, ts in events
+        ]
+        bronze = enrich_clickstream(spark.createDataFrame(rows, CLICKSTREAM_RAW_SCHEMA))
+        wh.append(bronze, "bronze.clickstream", partition_by=["ingest_date"])
+
+    def sessions():
+        df = wh.read("staging.stg_clickstream_sessions")
+        return {
+            r["session_id"]: (r["session_start_ts"], r["event_count"])
+            for r in df.collect()
+        }
+
+    land(
+        ("a1", "s-a", "2026-01-10 08:00:00"),
+        ("a2", "s-a", "2026-01-10 09:00:00"),
+        ("b1", "s-b", "2026-01-12 12:00:00"),
+    )
+    run_models(wh, select=select, full_refresh=True)
+    # the bound is now 2026-01-11 12:00; s-a gains an event after it
+    land(("a3", "s-a", "2026-01-11 13:00:00"))
+    run_models(wh, select=select)
+    incremental = sessions()
+    run_models(wh, select=select, full_refresh=True)
+    assert incremental == sessions()
+    assert incremental["s-a"] == (datetime.datetime(2026, 1, 10, 8, 0), 3)
+
+
+def test_gold_stream_runs_on_batch_loaded_warehouse(spark, tmp_path):
+    """``start_continuous_gold`` on a lake that ``run_pipeline`` loaded:
+    the stream's bronze append and silver merges accept the batch-written
+    tables, and the first micro-batch commits gold."""
+    from ecommerce_analytics_platform_spark.sources.manifest import ManifestTable
+    from ecommerce_analytics_platform_spark.sources.warehouse import Warehouse
+    from ecommerce_analytics_platform_spark.streaming.gold import start_continuous_gold
+
+    events, orders = generate_fixture(seed=5, n_sessions=12)
+    write_ndjson_fixture(events, str(tmp_path / "raw/clickstream/b1.json"))
+    write_ndjson_fixture(orders, str(tmp_path / "raw/orders/o1.json"))
+    run_pipeline(spark, str(tmp_path))
+
+    # new clickstream, including re-deliveries of batch-loaded events
+    late = generate_fixture(seed=6, n_sessions=4)[0]
+    write_ndjson_fixture(events[:10] + late, str(tmp_path / "stream/s1.json"))
+    q = start_continuous_gold(
+        spark, str(tmp_path / "stream"), str(tmp_path / "warehouse"),
+        str(tmp_path / "gold"), str(tmp_path / "checkpoints/gold"),
+    )
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+    kpis = ManifestTable(spark, str(tmp_path / "gold/metrics_daily_kpis"))
+    assert kpis.latest_version() is not None
+
+    wh = Warehouse(spark, str(tmp_path / "warehouse"))
+    for table, key in (
+        ("staging.stg_clickstream_events", "event_id"),
+        ("staging.stg_clickstream_sessions", "session_id"),
+    ):
+        df = wh.read(table)
+        assert df.count() == df.select(key).distinct().count(), table
