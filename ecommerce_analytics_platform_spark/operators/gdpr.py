@@ -84,11 +84,9 @@ def forget(
     # discovery / loses pruning). expected_base pins the read so a
     # concurrent delete_where on an affected file aborts instead of
     # being silently resurrected (r11 lost-delete race).
-    # DELIBERATELY no changes= (write-side CDF): the change rows of an
-    # ERASURE are the erased values themselves — persisting them under
-    # _changes/ would re-materialize exactly the bytes this commit
-    # exists to destroy. CDF readers derive this commit's diff, and
-    # after the vacuum below the history is gone with the data.
+    # CDF readers derive this commit's diff from the data files, so no
+    # copy of the erased rows outlives them: after the vacuum below the
+    # history is gone with the data.
     version = table.replace_files(
         files,
         kept,

@@ -37,6 +37,10 @@ O(metadata). Only genuine rewrite/delete/DV transitions need multiset
 cancellation, planned one task per touched HIVE PARTITION DIR — each
 bounded by that partition's changed files, never commit size, never table
 size (the same bound ``changes_between`` proves batch-side).
+
+Every change row is derived from the data and deletion-vector files a
+commit references; writers persist no change files. A ``"cdc"`` key that
+an older writer left in a commit doc is ignored.
 """
 
 from __future__ import annotations
@@ -277,26 +281,6 @@ def _thaw(row: tuple) -> tuple:
     # frozen rows feed pa.array directly: pyarrow accepts tuples for
     # list/struct/map slots alike (struct tuples are positional)
     return row
-
-
-class _CdcFile(InputPartition):
-    """Writer-persisted change file (VERDICT r12 missing #1): the commit
-    doc's ``"cdc"`` key names parquet files under ``_changes/`` holding
-    the commit's NET row changes (data columns + ``_change_type``),
-    written ONCE by the committing writer (``delete_where`` / ``merge``
-    — sources/manifest.py ``_write_cdc``). One task per change file —
-    the read is O(changes), never O(rewritten bytes): a 4M-row rewrite
-    whose merge touched 1k rows streams 2k change rows instead of
-    bucket-hash re-decoding every rewritten byte N times. The derived
-    diff (``_FullDiff`` below, and batch ``changes_between``) remains
-    the fallback for commits without cdc and the verification twin that
-    keeps writers honest (pytest pins cdc output bit-equal to the
-    derived output per commit class)."""
-
-    def __init__(self, version: int, rel_file: str, schema_json: str):
-        self.version = version
-        self.rel_file = rel_file
-        self.schema_json = schema_json
 
 
 class _InsertFile(InputPartition):
@@ -579,8 +563,8 @@ def _file_bucket_hash(tbl_raw, rel_file: str, schema_json: str):
     the hash BEFORE alignment lets the bucket filter drop (n-1)/n of
     the rows before any per-column cast/backfill/const-array work
     (VERDICT r12 next #7 — align only survivors; the parquet decode
-    itself stays per-task, which is why writer-persisted cdc files are
-    the real fix for writer-known commits). -0.0 normalizes to +0.0 and
+    itself stays per-task, so each of the n bucket tasks decodes every
+    rewritten file once). -0.0 normalizes to +0.0 and
     NaN to one canonical bit pattern inside :func:`_col_hash_u64`, so
     float rows Spark equality would cancel never split buckets."""
     import numpy as np
@@ -647,54 +631,7 @@ def _rows_to_batches(rows: list[tuple], schema_json: str, version: int):
     return pa.table(arrays, schema=schema).to_batches()
 
 
-def _cdc_batches(table_path: str, part: "_CdcFile") -> Iterator:
-    """Emit one writer-persisted change file: data columns aligned to
-    the pinned stream schema (columns the file predates back-fill NULL;
-    narrower on-disk types cast up), ``_change_type`` read from the
-    file, ``_commit_version`` stamped constant."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    target = _arrow_data_schema(part.schema_json)
-    tbl = pq.read_table(os.path.join(table_path, part.rel_file))
-    n = tbl.num_rows
-    if not n:
-        return
-    names = set(tbl.schema.names)
-    cols = []
-    for field in target:
-        if field.name in names:
-            col = tbl.column(field.name)
-            if col.type != field.type:
-                try:
-                    col = col.cast(field.type)
-                except Exception as e:
-                    raise RuntimeError(
-                        f"CDF stream schema pinned column '{field.name}' "
-                        f"as {field.type} but change file {part.rel_file} "
-                        f"carries {col.type} (table schema widened after "
-                        f"stream start?) — restart the stream to pick up "
-                        f"the widened schema"
-                    ) from e
-        else:
-            col = pa.nulls(n, field.type)
-        cols.append(col)
-    cols.append(tbl.column("_change_type").cast(pa.string()))
-    cols.append(_const_array(part.version, n, pa.int64()))
-    schema = pa.schema(
-        list(target)
-        + [
-            pa.field("_change_type", pa.string(), nullable=False),
-            pa.field("_commit_version", pa.int64(), nullable=False),
-        ]
-    )
-    yield from pa.table(cols, schema=schema).to_batches()
-
-
 def _read_partition(table_path: str, part) -> Iterator:
-    if isinstance(part, _CdcFile):
-        yield from _cdc_batches(table_path, part)
-        return
     if isinstance(part, _InsertFile):
         deleted = _dv_positions(table_path, part.dv_files).get(part.rel_file)
         tbl = _file_table(table_path, part.rel_file, part.schema_json, deleted)
@@ -951,10 +888,6 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         self.diff_buckets = int(db) if db is not None else None
         if self.diff_buckets is not None and self.diff_buckets < 1:
             raise ValueError("diff_buckets must be >= 1")
-        # writer-persisted change files are consumed by default (the
-        # O(changes) path); use_cdc=false forces derivation for every
-        # commit — the verification twin tests pin cdc == derived with
-        self.use_cdc = str(options.get("use_cdc", "true")).lower() != "false"
         self._base: int | None = None
         # reconstructed-snapshot cache, carried across microbatches on
         # the driver (ADVICE r11 #4: partitions() rebuilt BOTH endpoint
@@ -1049,14 +982,6 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 # file is opened at all. changes_between still PROVES the
                 # zero-diff from data, which is how the test suite keeps
                 # writers honest.
-                continue
-            cdc = doc.get("cdc") if self.use_cdc else None
-            if cdc is not None:
-                # writer-persisted change files: one task per file,
-                # O(changes) — no snapshot reconstruction, no diff. An
-                # EMPTY list is meaningful (a fully-idempotent merge
-                # netted to zero) and plans zero tasks.
-                parts += [_CdcFile(v, f, self.schema_json) for f in sorted(cdc)]
                 continue
             m2 = self._snap(v)
             m1 = self._snap(v - 1) if v > 1 else {}

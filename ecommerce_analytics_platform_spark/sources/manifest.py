@@ -156,7 +156,11 @@ class ConcurrentWriteConflict(RuntimeError):
 
 
 class ManifestTable:
-    """A parquet table whose state is defined by an atomic manifest."""
+    """A parquet table whose state is defined by an atomic manifest.
+
+    Commits write data and deletion-vector files only; change-data-feed
+    readers (:meth:`changes_between`, sources/cdf_stream.py) derive each
+    commit's row changes from the files the commit references."""
 
     def __init__(
         self, spark: SparkSession, path: str, log_store: LogStore | None = None
@@ -185,15 +189,6 @@ class ManifestTable:
         self._pending_constraints = self._UNSET
         # generated-column config override for set_generated_columns
         self._pending_generated = self._UNSET
-        # commit-time change files (write-side CDF): relative parquet
-        # paths under _changes/ holding this commit's NET row changes
-        # (data columns + _change_type), staged by the writer paths that
-        # already hold the ± rows (delete_where, merge). Consumed by the
-        # next _publish as the doc's "cdc" key; an apply_fn that detects
-        # its precomputed rows went stale resets it to _UNSET so the
-        # commit falls back to derivation (sources/cdf_stream.py reads
-        # cdc when present, else the bucket-hash diff).
-        self._staged_cdc = self._UNSET
         # operation label for commits made by the current public call
         # (set by the @_labeled decorators; recorded as the doc's "op")
         self._pending_op: str | None = None
@@ -420,14 +415,6 @@ class ManifestTable:
                 # writers materialize absent columns, checks enforce
                 # consistency of provided ones
                 doc["generated"] = gen
-            if self._staged_cdc is not self._UNSET:
-                # commit-time change files (Delta's cdc actions): the
-                # writer persisted this commit's NET row changes once;
-                # CDF readers consume them at O(changes) instead of
-                # re-deriving the diff from the rewritten bytes. Read
-                # AFTER apply_fn, which may have reset the staging when
-                # a concurrent commit invalidated the precomputed rows.
-                doc["cdc"] = sorted(self._staged_cdc)
             new_version = (base or 0) + 1
             # log-scale decision (sources/mlog.py): write an
             # O(changed-files) delta doc unless this version is a
@@ -647,45 +634,6 @@ class ManifestTable:
         bcfg = self.bloom_config()
         if bcfg and out and any(c in df.columns for c in bcfg["columns"]):
             self._write_bloom_sidecars(out, bcfg)
-        return out
-
-    # -- commit-time change files (write-side CDF) ---------------------------
-
-    CDC_COL = "_change_type"
-
-    def _write_cdc(self, changes: DataFrame) -> list[str]:
-        """Persist a commit's NET row changes — the table's data columns
-        plus ``_change_type`` ∈ {'insert', 'delete'} — as parquet under
-        ``_changes/<uuid>/`` and return the table-relative paths.
-
-        This is the write-side half of the CDF contract (VERDICT r12
-        next #1, Delta's cdc actions): the writer paths that rewrite or
-        tombstone data (``delete_where``, ``merge_delete_insert``)
-        already computed the ± rows; persisting them ONCE at commit
-        makes every CDF read of that commit O(changes) instead of an
-        N-task re-decode of the rewritten bytes. The files are
-        referenced from the commit doc's ``"cdc"`` key; ``vacuum``
-        reclaims them with their doc. ``changes_between`` deliberately
-        does NOT consume them — it derives the diff from the data, and
-        is the verification twin that keeps writers honest (the same
-        division of labor as the ``data_change=false`` flag)."""
-        rel_dir = os.path.join("_changes", uuid.uuid4().hex[:12])
-        out_dir = os.path.join(self.path, rel_dir)
-        # change sets inherit the upstream shuffle partitioning (an
-        # exceptAll leaves spark.sql.shuffle.partitions mostly-empty
-        # parts) — coalesce to a handful of files and drop the empty
-        # ones, so the CDF read plans a handful of non-empty tasks
-        # instead of one per empty shard (probe-measured: 64 empty cdc
-        # tasks cost more than the 16-bucket diff they replace)
-        changes.coalesce(4).write.parquet(out_dir)
-        import pyarrow.parquet as pq
-
-        out = []
-        for fn in sorted(os.listdir(out_dir)):
-            if not fn.endswith(".parquet"):
-                continue
-            if pq.ParquetFile(os.path.join(out_dir, fn)).metadata.num_rows:
-                out.append(os.path.join(rel_dir, fn))
         return out
 
     # -- per-file column stats (manifest-level data skipping) ---------------
@@ -1258,7 +1206,7 @@ class ManifestTable:
         at ``version`` (default latest) — location, file/byte/row
         counts (from the manifest's file_meta inventory; None when a
         legacy file predates it), partition/cluster/stats/bloom/
-        constraint/generated config, DV and CDC presence, txn count.
+        constraint/generated config, DV presence, txn count.
         Zero filesystem calls beyond the manifest read."""
         v = version if version is not None else self.latest_version()
         if v is None:
@@ -1283,7 +1231,6 @@ class ManifestTable:
             "num_deletion_vector_files": sum(
                 len(lst) for lst in m.get("dv", {}).values()
             ),
-            "has_change_files": bool(m.get("cdc")),
             "num_txns": len(m.get("txns", [])),
         }
 
@@ -1814,7 +1761,6 @@ class ManifestTable:
         txn_id: str | None = None,
         data_change: bool = True,
         expected_base=None,
-        changes: DataFrame | None = None,
     ) -> int:
         """File-level surgical commit: drop exactly ``remove`` (absolute or
         table-relative paths) from the snapshot and add ``df``'s files;
@@ -1847,23 +1793,7 @@ class ManifestTable:
         Concurrency class: commutes with commits that leave ``remove``
         and its DVs alone (appends, other-file rewrites, other-file
         deletes); a concurrent commit that removed/rewrote/tombstoned
-        any of them → :class:`ConcurrentWriteConflict`.
-
-        ``changes`` (optional, write-side CDF): a DataFrame of this
-        commit's NET row changes — the data columns plus
-        ``_change_type`` ∈ {'insert', 'delete'} — persisted once under
-        ``_changes/`` so CDF readers consume the commit at O(changes)
-        instead of re-deriving the diff from the rewritten bytes. The
-        caller owns net-ness (a row both removed and re-added must NOT
-        appear); ``changes_between`` remains derivation-based and is the
-        verification twin. Mutually exclusive with
-        ``data_change=False`` (a row-preserving commit has no changes
-        by definition — readers already skip it at O(metadata))."""
-        if changes is not None and data_change is False:
-            raise ValueError(
-                "changes= is meaningless on a data_change=False commit — "
-                "row-preserving commits are already skipped at O(metadata)"
-            )
+        any of them → :class:`ConcurrentWriteConflict`."""
         rel_remove = {
             os.path.relpath(p, self.path) if os.path.isabs(p) else p for p in remove
         }
@@ -1913,15 +1843,10 @@ class ManifestTable:
             return kept + staged[0], txns, self._rebased_schema_json(m, union)
 
         self._pending_data_change = data_change
-        if changes is not None:
-            # apply's DV-staleness abort covers the change rows too: a
-            # commit that would invalidate them conflicts instead
-            self._staged_cdc = self._write_cdc(changes)
         try:
             return self._publish(apply)
         finally:
             self._pending_data_change = True
-            self._staged_cdc = self._UNSET
 
     def _check_partition_layout(self, partition_by: list[str] | None) -> None:
         """Appending UNPARTITIONED files into a hive-partitioned table (or
@@ -2152,60 +2077,41 @@ class ManifestTable:
         # is the per-row __dv_file regexp); no-DV snapshots skip the
         # anti-join entirely
         dv_at_read = self._read_manifest(read_version).get("dv", {})
-        hits_full = self._with_position(raw).filter(cond)
+        hits = self._with_position(raw).filter(cond)
         if dv_at_read:
-            hits_full = hits_full.join(
+            hits = hits.join(
                 self.deleted_positions(read_version),
                 ["__dv_file", "__dv_pos"],
                 "left_anti",
             )
-        # the matched rows feed TWO writes (the DV addresses and the
-        # commit's change files) — cache so the pruned scan runs once
-        hits_full = hits_full.persist()
-        # try/finally: an exception from the DV write or _write_cdc must
-        # not leak the cached blocks for the session's lifetime
-        # (ADVICE r13 #4); unpersist is idempotent on the early return
-        try:
-            hits = hits_full.select("__dv_file", "__dv_pos")
-            stage = os.path.join("_dv", uuid.uuid4().hex[:12])
-            os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
-            hits.write.parquet(os.path.join(self.path, stage))
-            dv_files = [
-                os.path.join(stage, fn)
-                for fn in os.listdir(os.path.join(self.path, stage))
-                if fn.endswith(".parquet")
-            ]
-            touched = sorted(
-                r["__dv_file"]  # attribute access would name-mangle in-class
-                for r in self.spark.read.schema(self._DV_SCHEMA)
-                .parquet(*[os.path.join(self.path, d) for d in dv_files])
-                .select("__dv_file")
-                .distinct()
-                .collect()
-            ) if dv_files else []
-            if not touched:
-                # nothing matched: no-op commit (but still honor txn_id by
-                # recording it so a redelivery stays a no-op)
-                if txn_id is None:
-                    return read_version
-                return self._publish(
-                    lambda _b, m: None
-                    if (m and txn_id in m.get("txns", []))
-                    else (list(m["files"]) if m else [], [*self._base_txns(m), txn_id])
-                )
-            # write-side CDF: the matched rows ARE this commit's net change
-            # set — persist them once so CDF readers skip the DV-delta
-            # re-read entirely (O(changes), VERDICT r12 next #1)
-            data_cols = [
-                c for c in hits_full.columns if c not in ("__dv_file", "__dv_pos")
-            ]
-            cdc_files = self._write_cdc(
-                hits_full.select(*data_cols).withColumn(
-                    self.CDC_COL, F.lit("delete")
-                )
+        stage = os.path.join("_dv", uuid.uuid4().hex[:12])
+        os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
+        hits.select("__dv_file", "__dv_pos").write.parquet(
+            os.path.join(self.path, stage)
+        )
+        dv_files = [
+            os.path.join(stage, fn)
+            for fn in os.listdir(os.path.join(self.path, stage))
+            if fn.endswith(".parquet")
+        ]
+        touched = sorted(
+            r["__dv_file"]  # attribute access would name-mangle in-class
+            for r in self.spark.read.schema(self._DV_SCHEMA)
+            .parquet(*[os.path.join(self.path, d) for d in dv_files])
+            .select("__dv_file")
+            .distinct()
+            .collect()
+        ) if dv_files else []
+        if not touched:
+            # nothing matched: no-op commit (but still honor txn_id by
+            # recording it so a redelivery stays a no-op)
+            if txn_id is None:
+                return read_version
+            return self._publish(
+                lambda _b, m: None
+                if (m and txn_id in m.get("txns", []))
+                else (list(m["files"]) if m else [], [*self._base_txns(m), txn_id])
             )
-        finally:
-            hits_full.unpersist()
 
         def apply(base, m):
             if txn_id is not None and m and txn_id in m.get("txns", []):
@@ -2240,13 +2146,7 @@ class ManifestTable:
                         "rows in a touched file and appended replacement "
                         "rows; re-derive against the new snapshot"
                     )
-                # pure-delete race: still commutes, but this commit's
-                # precomputed change rows may double-count rows the other
-                # writer already tombstoned — drop the cdc staging and let
-                # CDF readers derive this version's delta from the DV diff
-                # instead (correct by construction). cdc is an
-                # optimization, never a correctness dependency.
-                self._staged_cdc = self._UNSET
+                # pure-delete race: commutes (position sets union below)
             for f in touched:
                 dv[f] = dv.get(f, []) + dv_files
             txns = self._base_txns(m)
@@ -2254,11 +2154,7 @@ class ManifestTable:
                 txns.append(txn_id)
             return list(m["files"]) if m else [], txns, None, dv
 
-        self._staged_cdc = cdc_files
-        try:
-            return self._publish(apply)
-        finally:
-            self._staged_cdc = self._UNSET
+        return self._publish(apply)
 
     @_labeled("update")
     def update_where(
@@ -2299,9 +2195,9 @@ class ManifestTable:
         appended postimage would RESURRECT rows a racing delete killed —
         so any DV change or file removal on a touched file aborts and
         RE-DERIVES against the new snapshot (bounded retries), the
-        standard OCC loop. Write-side CDF: preimage deletes + postimage
-        inserts persist once under ``_changes/`` (bit-equal to the
-        derived DV-delta + added-file diff)."""
+        standard OCC loop. CDF readers derive the commit's changes
+        (preimage deletes + postimage inserts) from the DV delta and the
+        added files."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         set_exprs = {
             c: (F.expr(e) if isinstance(e, str) else e) for c, e in set.items()
@@ -2336,12 +2232,12 @@ class ManifestTable:
                     ["__dv_file", "__dv_pos"],
                     "left_anti",
                 )
-            # the matched rows feed THREE writes (DV addresses, postimage
-            # data files, cdc change files) — cache so the scan runs once
+            # the matched rows feed TWO writes (DV addresses, postimage
+            # data files) — cache so the scan runs once
             hits_full = hits_full.persist()
             # try/finally: a CHECK-constraint violation in the postimage
-            # write (or any DV/cdc write failure) must not leak the
-            # cached blocks (ADVICE r13 #4)
+            # write (or a DV write failure) must not leak the cached
+            # blocks (ADVICE r13 #4)
             try:
                 stage = os.path.join("_dv", uuid.uuid4().hex[:12])
                 os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
@@ -2391,14 +2287,6 @@ class ManifestTable:
                         )
                 part_cols = self.partition_columns(read_version) or None
                 files_new = self._write_files(post, part_cols)
-                # write-side CDF: preimages out, postimages in — exactly the
-                # multiset a reader would derive from DV delta + added files
-                # (no cancellation between the two, matching the derivation)
-                cdc_files = self._write_cdc(
-                    pre.withColumn(self.CDC_COL, F.lit("delete")).unionByName(
-                        post.withColumn(self.CDC_COL, F.lit("insert"))
-                    )
-                )
             finally:
                 hits_full.unpersist()
 
@@ -2441,13 +2329,10 @@ class ManifestTable:
                     dv,
                 )
 
-            self._staged_cdc = cdc_files
             try:
                 return self._publish(apply)
             except ConcurrentWriteConflict as e:
                 last_conflict = e  # stale read → re-derive and retry
-            finally:
-                self._staged_cdc = self._UNSET
         raise last_conflict or ConcurrentWriteConflict("update retries exhausted")
 
     @_labeled("materialize_deletes")
@@ -2725,31 +2610,9 @@ class ManifestTable:
                     )
                 kept = affected.join(F.broadcast(keys), on=unique_key, how="left_anti")
                 merged = kept.select(*aligned_batch.columns).unionByName(aligned_batch)
-                # write-side CDF for the rewrite: net changes are
-                # matched\batch deletes + batch\matched inserts — the
-                # mutual exceptAll makes an idempotent re-upsert of
-                # identical rows net to ZERO, exactly like the derived
-                # file diff ((kept ⊎ batch) \ (kept ⊎ matched) = batch \
-                # matched as multisets), so cdc output is bit-equal to
-                # what a CDF reader would re-derive from the files.
-                matched = affected.join(
-                    F.broadcast(keys), on=unique_key, how="left_semi"
-                ).select(*aligned_batch.columns)
-                self._staged_cdc = self._write_cdc(
-                    matched.exceptAll(aligned_batch)
-                    .withColumn(self.CDC_COL, F.lit("delete"))
-                    .unionByName(
-                        aligned_batch.exceptAll(matched).withColumn(
-                            self.CDC_COL, F.lit("insert")
-                        )
-                    )
+                return self.replace_partitions(
+                    merged, partition_by, txn_id=txn_id, expected_base=read_version
                 )
-                try:
-                    return self.replace_partitions(
-                        merged, partition_by, txn_id=txn_id, expected_base=read_version
-                    )
-                finally:
-                    self._staged_cdc = self._UNSET
             except ConcurrentWriteConflict as e:
                 last_conflict = e  # stale read → re-derive on the new snapshot
         raise last_conflict or ConcurrentWriteConflict("merge retries exhausted")
@@ -2822,54 +2685,33 @@ class ManifestTable:
         # _metadata.file_path) — below the semi it runs on matched rows
         # only; above it, on every row (measured 11.5 s vs 2.3 s over 38M
         # rows). Skipped entirely when the snapshot carries no DVs.
-        hits_full = self._with_position(raw).join(
+        hits = self._with_position(raw).join(
             F.broadcast(keys), on=unique_key, how="left_semi"
         )
         if self._read_manifest(read_version).get("dv"):
-            hits_full = hits_full.join(
+            hits = hits.join(
                 self.deleted_positions(read_version),
                 ["__dv_file", "__dv_pos"],
                 "left_anti",
             )
-        # matched rows feed the DV addresses AND the commit's change
-        # files — cache so the pruned scan runs once
-        hits_full = hits_full.persist()
-        # try/finally: DV-write/cdc failures must not leak the cached
-        # blocks (ADVICE r13 #4)
-        try:
-            hits = hits_full.select("__dv_file", "__dv_pos")
-            stage = os.path.join("_dv", uuid.uuid4().hex[:12])
-            os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
-            hits.write.parquet(os.path.join(self.path, stage))
-            dv_files = [
-                os.path.join(stage, fn)
-                for fn in os.listdir(os.path.join(self.path, stage))
-                if fn.endswith(".parquet")
-            ]
-            touched = sorted(
-                r["__dv_file"]
-                for r in self.spark.read.schema(self._DV_SCHEMA)
-                .parquet(*[os.path.join(self.path, d) for d in dv_files])
-                .select("__dv_file")
-                .distinct()
-                .collect()
-            ) if dv_files else []
-            # write-side CDF: deletes = the tombstoned rows (aligned to the
-            # union schema, exactly what the DV-delta derivation would emit),
-            # inserts = the batch rows (same multiset as the added files).
-            # No cancellation between the two — the derived diff appends
-            # DV-delta deletes without cancelling against added-file inserts,
-            # and the cdc files must be bit-equal to it.
-            data_cols = [c for c in raw.columns]
-            cdc_files = self._write_cdc(
-                align_to_schema(hits_full.select(*data_cols), union)
-                .withColumn(self.CDC_COL, F.lit("delete"))
-                .unionByName(
-                    aligned_batch.withColumn(self.CDC_COL, F.lit("insert"))
-                )
-            )
-        finally:
-            hits_full.unpersist()
+        stage = os.path.join("_dv", uuid.uuid4().hex[:12])
+        os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
+        hits.select("__dv_file", "__dv_pos").write.parquet(
+            os.path.join(self.path, stage)
+        )
+        dv_files = [
+            os.path.join(stage, fn)
+            for fn in os.listdir(os.path.join(self.path, stage))
+            if fn.endswith(".parquet")
+        ]
+        touched = sorted(
+            r["__dv_file"]
+            for r in self.spark.read.schema(self._DV_SCHEMA)
+            .parquet(*[os.path.join(self.path, d) for d in dv_files])
+            .select("__dv_file")
+            .distinct()
+            .collect()
+        ) if dv_files else []
         files_new = self._write_files(aligned_batch, partition_by)
 
         # decoded allowed values per partition column, for the
@@ -2930,13 +2772,7 @@ class ManifestTable:
                 dv,
             )
 
-        # apply aborts on ANY concurrent touch of an affected partition
-        # (file or DV), so a cdc that publishes is never stale
-        self._staged_cdc = cdc_files
-        try:
-            return self._publish(apply)
-        finally:
-            self._staged_cdc = self._UNSET
+        return self._publish(apply)
 
     def clone_to(self, dest_path: str, version: int | None = None) -> "ManifestTable":
         """CLONE TABLE at O(metadata) cost: hardlink the snapshot's data
@@ -3172,7 +3008,9 @@ class ManifestTable:
         nothing else references it. The grace period keeps vacuum from
         yanking a tmp an in-flight commit is about to link. Unreferenced
         parquet checkpoint side files (``cp-*.parquet``) follow the same
-        grace rule.
+        grace rule. Change files an older writer left under
+        ``_changes/`` are referenced by no snapshot and go like any
+        other unreferenced parquet file.
 
         ``protect_versions_from`` (VERDICT r11 next #7 — the vacuum↔CDF
         retention foot-gun): a list of consumer anchors, each either an
@@ -3243,37 +3081,19 @@ class ManifestTable:
             os.rename(tmp, os.path.join(self.manifest_dir, f"v{oldest}.json"))
         live: set[str] = set()
         for v in keep:
-            # liveness needs files + dv (+ scalar cdc) — skip stats and
-            # file_meta decode on parquet-checkpoint tables
+            # liveness needs files + dv — skip stats and file_meta
+            # decode on parquet-checkpoint tables
             mk = self._read_manifest(v, columns=("dv",))
             live.update(mk["files"])
             # deletion-vector parquet referenced by kept snapshots is as
             # live as the data files it addresses
             for lst in mk.get("dv", {}).values():
                 live.update(lst)
-            # commit-time change files of retained versions: a CDF
-            # consumer replaying a retained version reads them
-            live.update(mk.get("cdc", []))
         # current Bloom geometry tag: sidecars of LIVE files whose name
         # carries a DIFFERENT tag were built under an older (m_bits, k,
         # seed) — already ignored by every probe; vacuum reclaims them
         bcfg_now = self._read_manifest(keep[-1]).get("bloom")
         cur_tag = f".{self._bloom_tag(bcfg_now)}" if bcfg_now else None
-        # change files of versions being DROPPED this pass: their docs
-        # are still on disk here (docs are deleted after the walk), so
-        # they are positively identifiable and reclaimed immediately —
-        # this is also the GDPR contract (forget_hard's vacuum must
-        # physically erase the deleted rows' bytes from _changes/, not
-        # leave them behind a grace window). Only cdc files referenced
-        # by NO doc at all (an in-flight commit's staging, or a crashed
-        # loser's) get the grace window.
-        dropped_cdc: set[str] = set()
-        for v in vs:
-            if v < floor:
-                try:
-                    dropped_cdc.update(self._read_doc(v).get("cdc", []))
-                except FileNotFoundError:
-                    pass
         removed = 0
         now_walk = time.time()
         for root, _dirs, files in os.walk(self.path):
@@ -3282,18 +3102,6 @@ class ManifestTable:
             for fn in files:
                 rel = os.path.relpath(os.path.join(root, fn), self.path)
                 if fn.endswith(".parquet") and rel not in live:
-                    if rel.split(os.sep, 1)[0] == "_changes" and rel not in dropped_cdc:
-                        # unreferenced by ANY doc: an IN-FLIGHT commit's
-                        # staging (written before its publish) — the
-                        # same grace window that protects tmp manifests
-                        p = os.path.join(root, fn)
-                        try:
-                            if now_walk - os.path.getmtime(p) > tmp_grace_sec:
-                                os.unlink(p)
-                                removed += 1
-                        except FileNotFoundError:
-                            pass
-                        continue
                     os.unlink(os.path.join(root, fn))
                     removed += 1
                 elif ".parquet.bloom." in fn:

@@ -56,10 +56,8 @@ CHECKPOINT_PARQUET_MIN_FILES = 256
 
 # scalar keys copied verbatim between snapshot and doc; the doc is
 # authoritative on reconstruction (absent key == absent in snapshot).
-# "cdc" is per-COMMIT metadata (the change files the committing writer
-# persisted under _changes/ — sources/manifest.py _write_cdc), carried
-# the same way as "op"/"ts": each doc stamps its own commit's value, so
-# a reconstructed snapshot at version v carries exactly v's cdc list.
+# A "cdc" key left by older writers (change-file lists) is not a scalar:
+# reconstruction drops it and no reader consults it.
 _SCALARS = (
     "base_version",
     "ts",
@@ -71,7 +69,6 @@ _SCALARS = (
     "constraints",
     "generated",
     "data_change",
-    "cdc",
 )
 
 # map-valued snapshot keys diffed as <key>_put / <key>_del in delta docs

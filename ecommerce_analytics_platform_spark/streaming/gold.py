@@ -25,7 +25,7 @@ Design (the 100 TB shape):
   order dates for product performance) so zero-activity rows converge too.
 - **Key-partitioned user metric**: metrics_user_lifecycle is user-keyed —
   rows land via ``merge_delete_insert`` on a hash-bucket partition
-  (``pmod(hash(user_id), n)``; partition-stable per key, so the merge
+  (``pmod(hash(user_id), GOLD_BUCKETS)``; partition-stable per key, so the merge
   rewrites only buckets containing touched users).
 - **Exactly-once**: every gold commit carries ``txn_id=f"{table}-{batch_id}"``
   — the ManifestTable txn set (carried across ALL commit classes) makes a
@@ -72,6 +72,11 @@ GOLD_TABLES = (
     "dim_products",
     "dim_session_context",
 )
+
+# hash buckets of the user- and product-keyed gold tables
+# (``pmod(hash(key), GOLD_BUCKETS)``); dim_session_context buckets by
+# ``models.SESSION_BUCKETS`` like the silver sessions table
+GOLD_BUCKETS = 16
 
 
 def _read_set_fingerprint(df) -> str:
@@ -139,7 +144,6 @@ def start_continuous_gold(
     gold_root: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    n_user_buckets: int = 16,
 ) -> StreamingQuery:
     """Clickstream NDJSON stream → per micro-batch: bronze append, silver
     merges (events + sessions), then partition-pruned recompute + commit
@@ -245,7 +249,7 @@ def start_continuous_gold(
         ul = M.metrics_user_lifecycle(
             fs.join(F.broadcast(users), "user_id"),
             fo.join(F.broadcast(users), "user_id"),
-        ).withColumn("u_bucket", F.pmod(F.hash("user_id"), F.lit(n_user_buckets)))
+        ).withColumn("u_bucket", F.pmod(F.hash("user_id"), F.lit(GOLD_BUCKETS)))
         gold("metrics_user_lifecycle").merge_delete_insert(
             ul, unique_key=["user_id"], partition_by=["u_bucket"],
             txn_id=f"ul-{batch_id}",
@@ -256,7 +260,7 @@ def start_continuous_gold(
         du = M.dim_users(
             fe.join(F.broadcast(users), "user_id"),
             fo.join(F.broadcast(users), "user_id"),
-        ).withColumn("u_bucket", F.pmod(F.hash("user_id"), F.lit(n_user_buckets)))
+        ).withColumn("u_bucket", F.pmod(F.hash("user_id"), F.lit(GOLD_BUCKETS)))
         gold("dim_users").merge_delete_insert(
             du, unique_key=["user_id"], partition_by=["u_bucket"],
             txn_id=f"dusers-{batch_id}",
@@ -267,7 +271,9 @@ def start_continuous_gold(
         # precedes the previously-first one correctly retakes row 1
         dsc = M.dim_session_context(
             fe.join(F.broadcast(touched_sessions), "session_id")
-        ).withColumn("s_bucket", F.pmod(F.hash("session_id"), F.lit(n_user_buckets)))
+        ).withColumn(
+            "s_bucket", F.pmod(F.hash("session_id"), F.lit(M.SESSION_BUCKETS))
+        )
         gold("dim_session_context").merge_delete_insert(
             dsc, unique_key=["session_id"], partition_by=["s_bucket"],
             txn_id=f"dsc-{batch_id}",
@@ -294,7 +300,7 @@ def start_continuous_gold(
             dp_t = gold("dim_products")
             if not dp_t.has_txn(fp_txn):
                 dp = M.dim_products(M.fact_order_items(stg_items)).withColumn(
-                    "p_bucket", F.pmod(F.hash("product_id"), F.lit(n_user_buckets))
+                    "p_bucket", F.pmod(F.hash("product_id"), F.lit(GOLD_BUCKETS))
                 )
                 dp_t.merge_delete_insert(
                     dp, unique_key=["product_id"], partition_by=["p_bucket"],

@@ -1,19 +1,15 @@
-"""Write-side CDF change files (VERDICT r12 next #1).
+"""CDF output of the writer commit classes: ``delete_where``,
+``merge_delete_insert`` (both modes) and ``update_where``.
 
-The writer paths that already hold a commit's ± rows — ``delete_where``,
-``merge_delete_insert`` (both modes), ``replace_files(changes=...)`` —
-persist them ONCE at commit under ``_changes/`` (manifest doc key
-``"cdc"``). ``manifest_cdf`` streams then consume the commit at
-O(changes); the bucket-hash diff remains the fallback for commits
-without cdc and the verification twin. Every test here pins the cdc
-path's output BIT-EQUAL to the derivation path's on the same log
-(``use_cdc=false``) and to batch ``changes_between`` — the contract the
-stream documents.
+No commit writes change files; ``manifest_cdf`` streams derive every
+commit's change rows from the data and deletion-vector files. Each test
+pins the streamed rows of one commit class BIT-EQUAL to batch
+``changes_between`` and to the expected rows — the contract the stream
+documents — plus the concurrency rules of ``update_where``.
 """
 
 from __future__ import annotations
 
-import os
 import types
 
 import pytest
@@ -21,8 +17,6 @@ from pyspark.sql import functions as F
 
 from ecommerce_analytics_platform_spark.sources.cdf_stream import (
     ManifestCDFDataSource,
-    ManifestCDFStreamReader,
-    _CdcFile,
 )
 from ecommerce_analytics_platform_spark.sources.manifest import ManifestTable
 
@@ -66,31 +60,11 @@ def _mk(spark, path, partition_by=("d",)) -> ManifestTable:
     return t
 
 
-def _planned(t: ManifestTable, v: int, **opts):
-    """The partitions a fresh reader plans for version v alone."""
-    schema = ManifestCDFDataSource(
-        {"path": t.path}
-    ).schema()
-    r = ManifestCDFStreamReader(schema, {"path": t.path, **opts})
-    return r.partitions({"version": v - 1}, {"version": v})
-
-
-def test_delete_where_persists_cdc_and_stream_consumes_it(spark, tmp_path):
+def test_delete_where_stream_equals_changes_between(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     v = t.delete_where(F.col("k").isin(2, 5))  # v2, DV-only commit
-    doc = t._read_doc(v)
-    assert doc.get("cdc"), "delete_where must persist change files"
-    for f in doc["cdc"]:
-        assert f.startswith("_changes" + os.sep)
-        assert os.path.exists(os.path.join(t.path, f))
-    # the planner consumes cdc: one task per change file, no diff task
-    parts = _planned(t, v)
-    assert parts and all(isinstance(p, _CdcFile) for p in parts)
-    # stream(cdc) == stream(derived) == batch changes_between — bit-equal
-    got_cdc = _run_pass(spark, t.path, str(tmp_path / "ck1"))
-    got_drv = _run_pass(spark, t.path, str(tmp_path / "ck2"), use_cdc="false")
-    assert _ms(got_cdc) == _ms(got_drv)
-    v_rows = [r for r in got_cdc if r["_commit_version"] == v]
+    got = _run_pass(spark, t.path, str(tmp_path / "ck1"))
+    v_rows = [r for r in got if r["_commit_version"] == v]
     assert _ms(v_rows) == _ms(t.changes_between(v - 1, v).collect())
     assert _ms(v_rows) == sorted(
         [(2, "v2", "d0", "delete"), (5, "v5", "d1", "delete")]
@@ -105,12 +79,8 @@ def test_merge_dv_mode_cdc_bit_equal_to_derived(spark, tmp_path):
     v = t.merge_delete_insert(
         batch, unique_key=["k"], partition_by=["d"], delete_mode="dv"
     )
-    assert t._read_doc(v).get("cdc")
-    assert all(isinstance(p, _CdcFile) for p in _planned(t, v))
-    got_cdc = _run_pass(spark, t.path, str(tmp_path / "c1"))
-    got_drv = _run_pass(spark, t.path, str(tmp_path / "c2"), use_cdc="false")
-    assert _ms(got_cdc) == _ms(got_drv)
-    v_rows = [r for r in got_cdc if r["_commit_version"] == v]
+    got = _run_pass(spark, t.path, str(tmp_path / "c1"))
+    v_rows = [r for r in got if r["_commit_version"] == v]
     assert _ms(v_rows) == _ms(t.changes_between(v - 1, v).collect())
     assert _ms(v_rows) == sorted(
         [
@@ -125,17 +95,12 @@ def test_merge_rewrite_mode_cdc_bit_equal_to_derived(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     batch = spark.createDataFrame(
         [(3, "V3", "d1"), (4, "v4", "d0")], ["k", "v", "d"]
-    )  # k=4 is an IDENTICAL re-upsert: must net to zero like the file diff
+    )  # k=4 is an IDENTICAL re-upsert: must net to zero in the file diff
     v = t.merge_delete_insert(
         batch, unique_key=["k"], partition_by=["d"], delete_mode="rewrite"
     )
-    assert t._read_doc(v).get("cdc") is not None
-    parts = _planned(t, v)
-    assert all(isinstance(p, _CdcFile) for p in parts)
-    got_cdc = _run_pass(spark, t.path, str(tmp_path / "c1"))
-    got_drv = _run_pass(spark, t.path, str(tmp_path / "c2"), use_cdc="false")
-    assert _ms(got_cdc) == _ms(got_drv)
-    v_rows = [r for r in got_cdc if r["_commit_version"] == v]
+    got = _run_pass(spark, t.path, str(tmp_path / "c1"))
+    v_rows = [r for r in got if r["_commit_version"] == v]
     assert _ms(v_rows) == _ms(t.changes_between(v - 1, v).collect())
     assert _ms(v_rows) == sorted(
         [(3, "v3", "d1", "delete"), (3, "V3", "d1", "insert")]
@@ -148,21 +113,18 @@ def test_fully_idempotent_merge_rewrite_nets_to_zero_cdc(spark, tmp_path):
     v = t.merge_delete_insert(
         batch, unique_key=["k"], partition_by=["d"], delete_mode="rewrite"
     )
-    # the commit rewrote partition d1 but changed no logical row: cdc is
-    # present-and-empty-of-rows, the stream emits nothing for v, and the
-    # derived diff agrees
-    assert "cdc" in t._read_doc(v)
+    # the commit rewrote partition d1 but changed no logical row: the
+    # stream emits nothing for v, and batch changes_between agrees
     got = _run_pass(spark, t.path, str(tmp_path / "c1"))
     assert [r for r in got if r["_commit_version"] == v] == []
     assert t.changes_between(v - 1, v).count() == 0
 
 
-def test_concurrent_overlapping_delete_drops_cdc_staging(spark, tmp_path):
-    """A concurrent DV commit landing on a touched file between
-    delete_where's read and its publish invalidates the precomputed
-    change rows: the commit still lands (DV deletes commute) but WITHOUT
-    cdc, and the derived diff — which both readers then use — reports
-    the truth (zero rows: the other writer deleted them first)."""
+def test_concurrent_overlapping_delete_commutes_and_streams_once(spark, tmp_path):
+    """A concurrent DV commit deleting the same row between
+    delete_where's read and its publish: the commit still lands (pure DV
+    deletes commute) and the derived diff reports the truth — zero rows
+    for it, because the other writer deleted the row first."""
     t1 = _mk(spark, tmp_path / "t")
     t2 = ManifestTable(spark, t1.path)
     orig = t1._publish
@@ -177,7 +139,7 @@ def test_concurrent_overlapping_delete_drops_cdc_staging(spark, tmp_path):
     t1._publish = types.MethodType(racy, t1)
     v = t1.delete_where(F.col("k") == 2)
     assert fired
-    assert "cdc" not in t1._read_doc(v), "stale cdc must be dropped"
+    assert v == t1.latest_version() and t1.read().filter("k = 2").count() == 0
     got = _run_pass(spark, t1.path, str(tmp_path / "c1"))
     v_rows = [r for r in got if r["_commit_version"] == v]
     assert _ms(v_rows) == _ms(t1.changes_between(v - 1, v).collect()) == []
@@ -187,63 +149,12 @@ def test_concurrent_overlapping_delete_drops_cdc_staging(spark, tmp_path):
     ]
 
 
-def test_replace_files_changes_param_and_data_change_guard(spark, tmp_path):
-    t = _mk(spark, tmp_path / "t", partition_by=())
-    m = t._read_manifest(t.latest_version())
-    old = list(m["files"])
-    new_df = spark.createDataFrame(
-        [(i, f"v{i}", f"d{i % 2}") for i in range(1, 8)], ["k", "v", "d"]
-    )
-    changes = spark.createDataFrame(
-        [(0, "v0", "d0", "delete")], ["k", "v", "d", "_change_type"]
-    )
-    v = t.replace_files(old, new_df, changes=changes)
-    assert t._read_doc(v).get("cdc")
-    got_cdc = _run_pass(spark, t.path, str(tmp_path / "c1"))
-    got_drv = _run_pass(spark, t.path, str(tmp_path / "c2"), use_cdc="false")
-    v_cdc = [r for r in got_cdc if r["_commit_version"] == v]
-    v_drv = [r for r in got_drv if r["_commit_version"] == v]
-    assert _ms(v_cdc) == _ms(v_drv) == [(0, "v0", "d0", "delete")]
-    with pytest.raises(ValueError, match="data_change"):
-        t.replace_files(old, new_df, data_change=False, changes=changes)
-
-
-def test_vacuum_keeps_referenced_cdc_reclaims_unreferenced(spark, tmp_path):
-    t = _mk(spark, tmp_path / "t")
-    v2 = t.delete_where(F.col("k") == 1)
-    cdc_v2 = t._read_doc(v2)["cdc"]
-    v3 = t.delete_where(F.col("k") == 3)
-    cdc_v3 = t._read_doc(v3)["cdc"]
-    # orphan staging (a crashed/raced commit's leftovers)
-    orphan_dir = os.path.join(t.path, "_changes", "deadbeef0000")
-    os.makedirs(orphan_dir)
-    orphan = os.path.join(orphan_dir, "part-0.parquet")
-    open(orphan, "wb").close()
-    # keep the last 2 versions (v2, v3): v3's cdc referenced, v2's... v2
-    # is retained too with keep_versions=2
-    t.vacuum(keep_versions=2, tmp_grace_sec=0.0)
-    for f in cdc_v2 + cdc_v3:
-        assert os.path.exists(os.path.join(t.path, f))
-    assert not os.path.exists(orphan)
-    # drop to 1 version: v2's cdc becomes unreferenced and is reclaimed
-    t.vacuum(keep_versions=1, tmp_grace_sec=0.0)
-    for f in cdc_v3:
-        assert os.path.exists(os.path.join(t.path, f))
-    for f in cdc_v2:
-        assert not os.path.exists(os.path.join(t.path, f))
-    # grace window: young unreferenced staging survives
-    os.makedirs(orphan_dir, exist_ok=True)
-    open(orphan, "wb").close()
-    t.vacuum(keep_versions=1, tmp_grace_sec=3600.0)
-    assert os.path.exists(orphan)
-
-
 def test_cdc_respects_schema_evolution_backfill(spark, tmp_path):
-    """A cdc file written BEFORE a widening commit back-fills NULL for
-    the added column when an evolved stream reads it — same rule as data
-    files."""
+    """A delete committed BEFORE a widening commit back-fills NULL for
+    the added column when an evolved stream reads it — same rule as for
+    inserts."""
     t = _mk(spark, tmp_path / "t")
-    t.delete_where(F.col("k") == 7)  # v2: cdc with (k, v, d)
+    t.delete_where(F.col("k") == 7)  # v2: DV-only delete over (k, v, d)
     wide = spark.createDataFrame([(100, "w", "d0", 1.5)], ["k", "v", "d", "x"])
     t.append(wide, partition_by=["d"])  # v3 widens schema
     got = _run_pass(spark, t.path, str(tmp_path / "c1"))
@@ -253,8 +164,8 @@ def test_cdc_respects_schema_evolution_backfill(spark, tmp_path):
 
 def test_update_where_dv_append_cdc_bit_equal(spark, tmp_path):
     """update_where: matched rows tombstoned + postimage appended in ONE
-    commit — zero data-file rewrites — and the commit's cdc is bit-equal
-    to the derived DV-delta + added-file diff."""
+    commit — zero data-file rewrites — and the streamed changes are
+    bit-equal to batch changes_between (DV delta + added files)."""
     t = _mk(spark, tmp_path / "t")
     old_files = set(t._read_manifest(t.latest_version())["files"])
     v = t.update_where(
@@ -267,12 +178,8 @@ def test_update_where_dv_append_cdc_bit_equal(spark, tmp_path):
     # semantics: values updated in place, row count stable
     got = {(r["k"], r["v"]) for r in t.read().collect()}
     assert (2, "V2") in got and (5, "V5") in got and len(got) == 8
-    assert t._read_doc(v).get("cdc")
-    assert all(isinstance(p, _CdcFile) for p in _planned(t, v))
-    got_cdc = _run_pass(spark, t.path, str(tmp_path / "c1"))
-    got_drv = _run_pass(spark, t.path, str(tmp_path / "c2"), use_cdc="false")
-    assert _ms(got_cdc) == _ms(got_drv)
-    v_rows = [r for r in got_cdc if r["_commit_version"] == v]
+    streamed = _run_pass(spark, t.path, str(tmp_path / "c1"))
+    v_rows = [r for r in streamed if r["_commit_version"] == v]
     assert _ms(v_rows) == _ms(t.changes_between(v - 1, v).collect())
     assert _ms(v_rows) == sorted(
         [

@@ -8,6 +8,9 @@ version committed since the last pass, then clean self-termination."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -235,9 +238,7 @@ def test_rewrite_commit_plans_one_diff_task_per_partition_dir(spark, tmp_path):
     t.merge_delete_insert(
         batch, unique_key=["k"], partition_by=["d"], delete_mode="rewrite"
     )
-    # the merge writer persists cdc change files (r13); this test pins
-    # the DERIVATION fallback's plan shape, so force it off
-    reader = _reader(t, use_cdc="false")
+    reader = _reader(t)
     parts = reader.partitions({"version": 1}, {"version": 2})
     assert len(parts) == 3 and all(isinstance(p, _FullDiff) for p in parts)
 
@@ -566,7 +567,7 @@ def test_all_nested_schema_fans_out_and_cancels_exactly(spark, tmp_path):
     )
     t.overwrite(df.repartition(2))  # v1
     t.overwrite(df.filter("st.a < 6").repartition(2))  # v2: genuine rewrite
-    reader = _reader(t, diff_buckets="4", use_cdc="false")
+    reader = _reader(t, diff_buckets="4")
     parts = reader.partitions({"version": 1}, {"version": 2})
     diffs = [p for p in parts if isinstance(p, _FullDiff)]
     assert len(diffs) == 4 and {p.bucket for p in diffs} == {0, 1, 2, 3}
@@ -710,7 +711,7 @@ def test_skewed_single_dir_rewrite_buckets_within_dir(spark, tmp_path):
     t.merge_delete_insert(
         batch, unique_key=["k"], partition_by=["d"], delete_mode="rewrite"
     )
-    reader = _reader(t, diff_buckets="3", use_cdc="false")
+    reader = _reader(t, diff_buckets="3")
     parts = reader.partitions({"version": 1}, {"version": 2})
     diffs = [p for p in parts if isinstance(p, _FullDiff)]
     # one touched dir, forced 3 buckets inside it
@@ -756,3 +757,63 @@ def test_bucketed_cancellation_across_schema_widening(spark, tmp_path):
     q.awaitTermination()
     assert [r for r in got if r["_commit_version"] == 3] == []
     assert sorted(r["_commit_version"] for r in got) == [1] * 12 + [2]
+
+
+def test_writers_leave_no_change_files_and_cdf_is_derived(spark, tmp_path):
+    """Merges (both modes), delete_where and update_where on one table
+    write no change files — no ``_changes/`` directory, no ``cdc`` key in
+    any commit doc — and one stream pass still equals changes_between
+    for every version."""
+    t = _mk(spark, tmp_path / "tn")  # v1
+    t.merge_delete_insert(
+        spark.createDataFrame([(2, "M2", "d0"), (20, "v20", "d0")], ["k", "v", "d"]),
+        unique_key=["k"], partition_by=["d"], delete_mode="dv",
+    )  # v2
+    t.merge_delete_insert(
+        spark.createDataFrame([(3, "M3", "d1"), (4, "v4", "d0")], ["k", "v", "d"]),
+        unique_key=["k"], partition_by=["d"], delete_mode="rewrite",
+    )  # v3
+    t.delete_where(F.col("k").isin(5, 20))  # v4
+    t.update_where("k = 6", set={"v": F.lit("U6")})  # v5
+    assert t.latest_version() == 5
+    assert not os.path.exists(os.path.join(t.path, "_changes"))
+    assert all("cdc" not in t._read_doc(v) for v in range(1, 6))
+
+    got = _run_pass(spark, t.path, str(tmp_path / "ckptn"))
+    for v in range(1, 6):
+        v_rows = [r for r in got if r["_commit_version"] == v]
+        assert _collected_multiset(v_rows) == _rows(_batch_changes(spark, t, v)), v
+    assert _collected_multiset(
+        r for r in got if r["_commit_version"] == 5
+    ) == [(6, "U6", "d0", "insert"), (6, "v6", "d0", "delete")]
+
+
+def test_legacy_cdc_key_is_ignored_and_vacuum_reclaims_change_files(spark, tmp_path):
+    """A commit doc written by an older writer may still name change files
+    under a ``cdc`` key: the stream ignores them and derives the commit's
+    rows, and vacuum reclaims the files as unreferenced parquet."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = _mk(spark, tmp_path / "tl")  # v1
+    v = t.delete_where(F.col("k") == 3)  # v2
+    rel = os.path.join("_changes", "old0", "part-0.parquet")
+    os.makedirs(os.path.join(t.path, "_changes", "old0"))
+    pq.write_table(
+        pa.table({"k": [999], "v": ["bogus"], "d": ["d0"], "_change_type": ["insert"]}),
+        os.path.join(t.path, rel),
+    )
+    doc_file = os.path.join(t.path, "_manifests", f"v{v}.json")
+    with open(doc_file) as f:
+        doc = json.load(f)
+    doc["cdc"] = [rel]
+    with open(doc_file, "w") as f:
+        json.dump(doc, f)
+
+    got = _run_pass(spark, t.path, str(tmp_path / "ckptl"))
+    v_rows = [r for r in got if r["_commit_version"] == v]
+    assert _collected_multiset(v_rows) == _rows(_batch_changes(spark, t, v))
+    assert _collected_multiset(v_rows) == [(3, "v3", "d1", "delete")]
+    t.vacuum(keep_versions=1)
+    assert not os.path.exists(os.path.join(t.path, rel))
+    assert t.read().count() == 7

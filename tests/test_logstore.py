@@ -63,16 +63,15 @@ def test_list_on_missing_dir_is_empty(tmp_path):
 
 def test_manifest_table_end_to_end_on_conditional_put_store(spark, tmp_path):
     """Full table lifecycle through the object-store contract: commits,
-    delete (with cdc), time travel, vacuum — no link/rename visible to
-    the protocol."""
+    delete, time travel, vacuum — no link/rename visible to the
+    protocol."""
     t = ManifestTable(
         spark, str(tmp_path / "t"), log_store=ConditionalPutLogStore()
     )
     df = spark.createDataFrame([(i, f"v{i}") for i in range(6)], ["k", "v"])
     t.overwrite(df)  # v1
     t.append(spark.createDataFrame([(10, "x")], ["k", "v"]))  # v2
-    v3 = t.delete_where(F.col("k") == 0)
-    assert t._read_doc(v3).get("cdc")
+    t.delete_where(F.col("k") == 0)  # v3
     assert t.read().count() == 6
     assert t.read(version=1).count() == 6 and t.read(version=2).count() == 7
     t.vacuum(keep_versions=1, tmp_grace_sec=0.0)

@@ -595,7 +595,7 @@ def test_vacuum_time_based_retention(spark, tmp_path):
 
 def test_detail_summarizes_table_metadata_only(spark, tmp_path):
     """DESCRIBE DETAIL: one dict from the manifest alone — counts from
-    the file_meta inventory, full declarative config, DV/cdc presence."""
+    the file_meta inventory, full declarative config, DV presence."""
     from ecommerce_analytics_platform_spark.sources.manifest import ManifestTable
 
     t = ManifestTable(spark, str(tmp_path / "t"))
@@ -615,7 +615,6 @@ def test_detail_summarizes_table_metadata_only(spark, tmp_path):
     assert d["cluster_by"] == ["k"] and d["stats_columns"] == ["k"]
     assert d["constraints"] == {"k_pos": "k >= 0"}
     assert d["num_deletion_vector_files"] >= 1
-    assert d["has_change_files"] is True  # delete persisted cdc
     # time travel: the pre-delete version shows no DVs
     d0 = t.detail(version=d["version"] - 1)
     assert d0["num_deletion_vector_files"] == 0

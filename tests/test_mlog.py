@@ -348,7 +348,7 @@ def test_partial_snapshot_load_projects_bulk_maps(spark, tmp_path):
         spark.createDataFrame([(i, f"v{i}") for i in range(8)], ["k", "v"])
         .repartition(2)
     )  # v2
-    t.delete_where(F.col("k") == 3)  # v3: DV + cdc
+    t.delete_where(F.col("k") == 3)  # v3: DV
     t.append(
         spark.createDataFrame([(50, "z")], ["k", "v"]).coalesce(1)
     )  # v4: checkpoint slot
@@ -359,7 +359,6 @@ def test_partial_snapshot_load_projects_bulk_maps(spark, tmp_path):
         assert part.get("txns", []) == full.get("txns", [])
         assert part.get("dv") == full.get("dv")
         assert part.get("schema") == full.get("schema")
-        assert part.get("cdc") == full.get("cdc")
         assert "stats" not in part and "file_meta" not in part
         assert full.get("stats")  # the full load genuinely carried them
     # pointer-doc (parquet side file) checkpoints: force the spill low
