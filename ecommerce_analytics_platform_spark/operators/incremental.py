@@ -43,6 +43,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ecommerce_analytics_platform_spark.sources.warehouse import has_parquet
+
 
 LOOKBACK = "INTERVAL 1 DAY"
 
@@ -74,19 +76,10 @@ def lookback_filter(
     return source.filter(cmp)
 
 
-def _has_data(p: str) -> bool:
-    if not os.path.isdir(p):
-        return False
-    for _r, _d, files in os.walk(p):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
 def _complete(p: str) -> bool:
     """A swap sibling is a complete table iff it has data files and Spark's
     commit marker (no half-written job output)."""
-    return _has_data(p) and os.path.exists(os.path.join(p, "_SUCCESS"))
+    return has_parquet(p) and os.path.exists(os.path.join(p, "_SUCCESS"))
 
 
 def recover_swap(target_path: str) -> bool:
@@ -107,7 +100,7 @@ def recover_swap(target_path: str) -> bool:
         for d in os.listdir(parent)
         if d.startswith(base + "__tmp_") or d.startswith(base + "__old_")
     ]
-    if _has_data(target_path):
+    if has_parquet(target_path):
         for s in sibs:
             shutil.rmtree(s, ignore_errors=True)
         return False
@@ -198,7 +191,7 @@ def merge_delete_insert(
 
     writer_cols = new_batch.columns
 
-    if not _has_data(target_path):
+    if not has_parquet(target_path):
         w = new_batch.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)

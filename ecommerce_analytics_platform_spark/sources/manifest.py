@@ -174,21 +174,11 @@ class ManifestTable:
         # PUT for object-store deployments (sources/logstore.py)
         self.store = log_store or PosixLogStore()
         # stats staged by _write_files for files not yet published
-        # (consumed + pruned by _publish); config override for the
-        # set_stats_columns commit
+        # (consumed + pruned by _publish)
         self._staged_stats: dict[str, dict] = {}
         # physical (bytes, rows) per file staged by _write_files,
         # published as the manifest's file_meta key
         self._staged_file_meta: dict[str, list] = {}
-        self._pending_stats_columns = self._UNSET
-        # Bloom sidecar config override for the set_bloom_columns commit
-        self._pending_bloom = self._UNSET
-        # clustering config override for the set_cluster_by commit
-        self._pending_cluster = self._UNSET
-        # CHECK-constraint config override for add/drop_check_constraint
-        self._pending_constraints = self._UNSET
-        # generated-column config override for set_generated_columns
-        self._pending_generated = self._UNSET
         # operation label for commits made by the current public call
         # (set by the @_labeled decorators; recorded as the doc's "op")
         self._pending_op: str | None = None
@@ -261,7 +251,7 @@ class ManifestTable:
         v = self.latest_version()
         return v is not None and txn_id in self._read_manifest(v).get("txns", [])
 
-    def _publish(self, apply_fn) -> int:
+    def _publish(self, apply_fn, config: dict | None = None) -> int:
         """Optimistic-concurrency commit loop.
 
         ``apply_fn(base_version, base_manifest | None) -> (files, txns)``
@@ -274,7 +264,12 @@ class ManifestTable:
         commit re-unions on rebase). ``apply_fn`` raises
         :class:`ConcurrentWriteConflict` when its preconditions no longer
         hold on the new base (non-commuting commits abort cleanly; the
-        published chain is always a valid snapshot)."""
+        published chain is always a valid snapshot).
+
+        ``config`` overrides the base's table config
+        (``mlog.CONFIG_KEYS``) for the keys it names; every other key
+        carries forward."""
+        config = config or {}
         self.store.ensure_dir(self.manifest_dir)
         while True:
             base = self.latest_version()
@@ -309,8 +304,7 @@ class ManifestTable:
                 }
             # per-file column stats: carry forward for surviving files,
             # merge in whatever this commit collected for its new files
-            # (self._staged_stats, set by _write_files); stats_columns
-            # config carries forward unchanged
+            # (self._staged_stats, set by _write_files)
             fileset = set(files)
             stats = {
                 f: s
@@ -369,52 +363,13 @@ class ManifestTable:
                 # {file: [bytes, rows]} — the physical inventory
                 # auto-maintenance plans from without touching the fs
                 doc["file_meta"] = file_meta
-            sc = (
-                self._pending_stats_columns
-                if self._pending_stats_columns is not self._UNSET
-                else (m.get("stats_columns") if m else None)
-            )
-            if sc:
-                doc["stats_columns"] = sc
-            bl = (
-                self._pending_bloom
-                if self._pending_bloom is not self._UNSET
-                else (m.get("bloom") if m else None)
-            )
-            if bl:
-                # Bloom sidecar config ({columns, m_bits, k, seed}) —
-                # the bitmaps themselves live NEXT TO the data files
-                # (<file>.bloom.<col>), never in the log
-                doc["bloom"] = bl
-            cl = (
-                self._pending_cluster
-                if self._pending_cluster is not self._UNSET
-                else (m.get("cluster_by") if m else None)
-            )
-            if cl:
-                # persisted clustering config (Delta's clustered-table
-                # metadata): writers and auto-maintenance default their
-                # layout from it (set_cluster_by)
-                doc["cluster_by"] = cl
-            cons = (
-                self._pending_constraints
-                if self._pending_constraints is not self._UNSET
-                else (m.get("constraints") if m else None)
-            )
-            if cons:
-                # persisted CHECK constraints (Delta's ADD CONSTRAINT):
-                # every data-file write enforces them row-level
-                doc["constraints"] = cons
-            gen = (
-                self._pending_generated
-                if self._pending_generated is not self._UNSET
-                else (m.get("generated") if m else None)
-            )
-            if gen:
-                # generated-column config (Delta's GENERATED ALWAYS AS):
-                # writers materialize absent columns, checks enforce
-                # consistency of provided ones
-                doc["generated"] = gen
+            for k in mlog.CONFIG_KEYS:
+                # table config (mlog.CONFIG_KEYS) carries forward
+                # unchanged unless this commit overrides it; a falsy
+                # value clears the key
+                val = config[k] if k in config else (m.get(k) if m else None)
+                if val:
+                    doc[k] = val
             new_version = (base or 0) + 1
             # log-scale decision (sources/mlog.py): write an
             # O(changed-files) delta doc unless this version is a
@@ -583,9 +538,14 @@ class ManifestTable:
     def _write_files(self, df: DataFrame, partition_by: list[str] | None) -> list[str]:
         """Write df's data into the table dir under a unique staging prefix
         and return the relative parquet paths. Files land in hive-style
-        partition dirs so their paths self-describe partition values."""
+        partition dirs so their paths self-describe partition values.
+
+        The table config is read once; each feature (CHECK and
+        generated-column enforcement, stats collection, Bloom sidecars)
+        runs only when its own key is set."""
+        cfg = self._config()
         stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex[:12]}")
-        w = self._with_checks(df).write.mode("overwrite")
+        w = self._with_checks(df, cfg).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         try:
@@ -626,29 +586,41 @@ class ManifestTable:
                 os.path.getsize(p),
                 pq.ParquetFile(p).metadata.num_rows,
             ]
-        cols = [
-            c for c in (self.stats_columns() or []) if c in df.columns
-        ]
+        cols = [c for c in cfg.get("stats_columns", []) if c in df.columns]
         if cols and out:
             self._staged_stats.update(self._collect_stats(out, cols))
-        bcfg = self.bloom_config()
+        bcfg = cfg.get("bloom")
         if bcfg and out and any(c in df.columns for c in bcfg["columns"]):
             self._write_bloom_sidecars(out, bcfg)
         return out
+
+    # -- table config (mlog.CONFIG_KEYS) ------------------------------------
+
+    def _config(self, version: int | None = None) -> dict:
+        """The table's feature config at ``version`` (default latest):
+        ``{key: value}`` over ``mlog.CONFIG_KEYS``, holding only the keys
+        the table turned on. One log listing and one (cached) snapshot
+        read serve every key."""
+        v = version if version is not None else self.latest_version()
+        if v is None:
+            return {}
+        m = self._read_manifest(v)
+        return {k: m[k] for k in mlog.CONFIG_KEYS if m.get(k)}
+
+    def _commit_config(self, key: str, value) -> int:
+        """Table-config commit: republish the current snapshot with
+        config ``key`` set to ``value`` (a falsy value clears it)."""
+        return self._publish(
+            lambda _b, m: (list(m["files"]) if m else [], self._base_txns(m)),
+            config={key: value},
+        )
 
     # -- per-file column stats (manifest-level data skipping) ---------------
 
     def stats_columns(self, version: int | None = None) -> list[str]:
         """Columns this table collects per-file min/max for (set via
         :meth:`set_stats_columns`; empty for tables that never opted in)."""
-        v = version if version is not None else self.latest_version()
-        if v is None:
-            return (
-                []
-                if self._pending_stats_columns is self._UNSET
-                else list(self._pending_stats_columns or [])
-            )
-        return list(self._read_manifest(v).get("stats_columns", []))
+        return list(self._config(version).get("stats_columns", []))
 
     @_labeled("set_stats_columns")
     def set_stats_columns(self, cols: list[str] | None) -> int:
@@ -658,27 +630,14 @@ class ManifestTable:
         pruning; rewrite them (compaction / ``write_zordered`` ingest) to
         backfill. ``None``/``[]`` turns collection off (existing stats
         remain usable)."""
-        self._pending_stats_columns = list(cols) if cols else None
-        try:
-            return self._publish(
-                lambda _b, m: (list(m["files"]) if m else [], self._base_txns(m))
-            )
-        finally:
-            self._pending_stats_columns = self._UNSET
+        return self._commit_config("stats_columns", list(cols) if cols else None)
 
     # -- persisted clustering config -----------------------------------------
 
     def cluster_config(self, version: int | None = None) -> list[str] | None:
         """The table's declared clustering columns (:meth:`set_cluster_by`)
         or None for tables that never opted in."""
-        v = version if version is not None else self.latest_version()
-        if v is None:
-            return (
-                None
-                if self._pending_cluster is self._UNSET
-                else self._pending_cluster
-            )
-        return self._read_manifest(v).get("cluster_by")
+        return self._config(version).get("cluster_by")
 
     @_labeled("set_cluster_by")
     def set_cluster_by(self, cols: list[str] | None) -> int:
@@ -692,27 +651,14 @@ class ManifestTable:
         ones. Existing files keep their layout until rewritten. Pair
         with :meth:`set_stats_columns` on the same keys so the layout
         actually prunes. ``None``/``[]`` clears the config."""
-        self._pending_cluster = list(cols) if cols else None
-        try:
-            return self._publish(
-                lambda _b, m: (list(m["files"]) if m else [], self._base_txns(m))
-            )
-        finally:
-            self._pending_cluster = self._UNSET
+        return self._commit_config("cluster_by", list(cols) if cols else None)
 
     # -- CHECK constraints ----------------------------------------------------
 
     def check_constraints(self, version: int | None = None) -> dict:
         """The table's persisted CHECK constraints ``{name: sql_expr}``
         (:meth:`add_check_constraint`); {} for tables without any."""
-        v = version if version is not None else self.latest_version()
-        if v is None:
-            return (
-                {}
-                if self._pending_constraints is self._UNSET
-                else dict(self._pending_constraints or {})
-            )
-        return dict(self._read_manifest(v).get("constraints") or {})
+        return dict(self._config(version).get("constraints", {}))
 
     @_labeled("add_constraint")
     def add_check_constraint(self, name: str, expr: str) -> int:
@@ -741,13 +687,7 @@ class ManifestTable:
                 )
         cons = dict(self.check_constraints())
         cons[name] = expr
-        self._pending_constraints = cons
-        try:
-            return self._publish(
-                lambda _b, m: (list(m["files"]) if m else [], self._base_txns(m))
-            )
-        finally:
-            self._pending_constraints = self._UNSET
+        return self._commit_config("constraints", cons)
 
     @_labeled("drop_constraint")
     def drop_check_constraint(self, name: str) -> int:
@@ -755,24 +695,19 @@ class ManifestTable:
         no-op, matching ``DROP CONSTRAINT IF EXISTS``)."""
         cons = dict(self.check_constraints())
         cons.pop(name, None)
-        self._pending_constraints = cons or None
-        try:
-            return self._publish(
-                lambda _b, m: (list(m["files"]) if m else [], self._base_txns(m))
-            )
-        finally:
-            self._pending_constraints = self._UNSET
+        return self._commit_config("constraints", cons or None)
 
-    def _with_checks(self, df: DataFrame) -> DataFrame:
+    def _with_checks(self, df: DataFrame, cfg: dict) -> DataFrame:
         """Attach row-level CHECK enforcement to a frame about to be
         written: each constraint becomes a codegen'd predicate INSIDE the
         write job (zero extra passes) that raises — failing the job and
         aborting the commit — on the first FALSE row. NULL passes (SQL
         CHECK semantics). Generated columns enforce the implicit
         invariant ``col <=> (expr)`` the same way (strict: null-safe
-        equality never yields NULL)."""
-        checks = dict(self.check_constraints())
-        for g, e in self.generated_columns().items():
+        equality never yields NULL). ``cfg`` is the table config
+        (:meth:`_config`) the write already read."""
+        checks = dict(cfg.get("constraints", {}))
+        for g, e in cfg.get("generated", {}).items():
             if g in df.columns:
                 checks[f"__generated_{g}"] = f"{g} <=> ({e})"
         for name, sql in checks.items():
@@ -791,14 +726,7 @@ class ManifestTable:
     def generated_columns(self, version: int | None = None) -> dict:
         """The table's generated-column config ``{col: sql_expr}``
         (:meth:`set_generated_columns`); {} when none declared."""
-        v = version if version is not None else self.latest_version()
-        if v is None:
-            return (
-                {}
-                if self._pending_generated is self._UNSET
-                else dict(self._pending_generated or {})
-            )
-        return dict(self._read_manifest(v).get("generated") or {})
+        return dict(self._config(version).get("generated", {}))
 
     @_labeled("set_generated")
     def set_generated_columns(self, mapping: dict | None) -> int:
@@ -839,13 +767,7 @@ class ManifestTable:
                         f"cannot declare generated column {g!r}: existing "
                         f"rows disagree with ({e})"
                     )
-        self._pending_generated = dict(mapping) if mapping else None
-        try:
-            return self._publish(
-                lambda _b, m: (list(m["files"]) if m else [], self._base_txns(m))
-            )
-        finally:
-            self._pending_generated = self._UNSET
+        return self._commit_config("generated", dict(mapping) if mapping else None)
 
     def _with_generated(self, df: DataFrame) -> DataFrame:
         """Materialize declared generated columns ABSENT from a batch
@@ -862,14 +784,7 @@ class ManifestTable:
     def bloom_config(self, version: int | None = None) -> dict | None:
         """The table's Bloom data-skipping config (:meth:`set_bloom_columns`)
         or None for tables that never opted in."""
-        v = version if version is not None else self.latest_version()
-        if v is None:
-            return (
-                None
-                if self._pending_bloom is self._UNSET
-                else self._pending_bloom
-            )
-        return self._read_manifest(v).get("bloom")
+        return self._config(version).get("bloom")
 
     @_labeled("set_bloom_columns")
     def set_bloom_columns(
@@ -929,7 +844,8 @@ class ManifestTable:
                         f"time but str(value) at probe time, a silent "
                         f"false-negative mismatch"
                     )
-        self._pending_bloom = (
+        return self._commit_config(
+            "bloom",
             {
                 "columns": list(cols),
                 "m_bits": int(m_bits),
@@ -937,14 +853,8 @@ class ManifestTable:
                 "seed": int(seed),
             }
             if cols
-            else None
+            else None,
         )
-        try:
-            return self._publish(
-                lambda _b, m: (list(m["files"]) if m else [], self._base_txns(m))
-            )
-        finally:
-            self._pending_bloom = self._UNSET
 
     @staticmethod
     def _bloom_tag(cfg: dict) -> str:
@@ -1223,11 +1133,11 @@ class ManifestTable:
             "size_bytes": sum(meta[f][0] for f in covered) if full else None,
             "num_rows": sum(meta[f][1] for f in covered) if full else None,
             "partition_columns": self.partition_columns(v),
-            "cluster_by": m.get("cluster_by") or [],
-            "stats_columns": m.get("stats_columns") or [],
-            "bloom_columns": (m.get("bloom") or {}).get("columns", []),
-            "constraints": dict(m.get("constraints") or {}),
-            "generated_columns": dict(m.get("generated") or {}),
+            "cluster_by": self.cluster_config(v) or [],
+            "stats_columns": self.stats_columns(v),
+            "bloom_columns": (self.bloom_config(v) or {}).get("columns", []),
+            "constraints": self.check_constraints(v),
+            "generated_columns": self.generated_columns(v),
             "num_deletion_vector_files": sum(
                 len(lst) for lst in m.get("dv", {}).values()
             ),
@@ -1920,36 +1830,24 @@ class ManifestTable:
         would poison every future rewrite of files holding a violation
         (the check raises inside compaction's write job, forever)."""
         target = self._read_manifest(version)
-        self._pending_stats_columns = target.get("stats_columns") or None
-        self._pending_bloom = target.get("bloom") or None
-        self._pending_cluster = target.get("cluster_by") or None
-        self._pending_constraints = target.get("constraints") or None
-        self._pending_generated = target.get("generated") or None
         self._staged_stats.update(target.get("stats", {}))
         self._staged_file_meta.update(target.get("file_meta", {}))
-        try:
-            return self._publish(
-                lambda _base, m: (
-                    list(target["files"]),
-                    self._base_txns(m),
-                    # the target's declared schema (None for legacy
-                    # targets → current schema carries forward)
-                    target.get("schema"),
-                    # restore the TARGET's deletion vectors, not the
-                    # current ones pruned: the restored snapshot's logical
-                    # content is the target's (files minus its DVs)
-                    dict(target.get("dv", {})),
-                )
-            )
-        finally:
-            for a in (
-                "_pending_stats_columns",
-                "_pending_bloom",
-                "_pending_cluster",
-                "_pending_constraints",
-                "_pending_generated",
-            ):
-                setattr(self, a, self._UNSET)
+        return self._publish(
+            lambda _base, m: (
+                list(target["files"]),
+                self._base_txns(m),
+                # the target's declared schema (None for legacy
+                # targets → current schema carries forward)
+                target.get("schema"),
+                # restore the TARGET's deletion vectors, not the
+                # current ones pruned: the restored snapshot's logical
+                # content is the target's (files minus its DVs)
+                dict(target.get("dv", {})),
+            ),
+            # every config key takes the target's value; a key the
+            # target lacks is cleared
+            config={k: target.get(k) for k in mlog.CONFIG_KEYS},
+        )
 
     @staticmethod
     def _prune_by_partition_values(
@@ -2821,20 +2719,6 @@ class ManifestTable:
         doc_stats = m.get("stats", {})
         dest._staged_stats.update(doc_stats)
         dest._staged_file_meta.update(m.get("file_meta", {}))
-        if m.get("stats_columns"):
-            dest._pending_stats_columns = list(m["stats_columns"])
-        if m.get("bloom"):
-            dest._pending_bloom = dict(m["bloom"])
-        # the declarative config clones too — a copy that silently
-        # dropped its CHECK constraints / generated columns / clustering
-        # would accept writes the source never would (same metadata-
-        # travels-with-data rule as restore)
-        if m.get("cluster_by"):
-            dest._pending_cluster = list(m["cluster_by"])
-        if m.get("constraints"):
-            dest._pending_constraints = dict(m["constraints"])
-        if m.get("generated"):
-            dest._pending_generated = dict(m["generated"])
         dest._pending_op = "clone"
         try:
             dest._publish(
@@ -2843,14 +2727,14 @@ class ManifestTable:
                     [],
                     m.get("schema"),
                     {f: list(lst) for f, lst in m.get("dv", {}).items()},
-                )
+                ),
+                # the whole config clones too — a copy that silently
+                # dropped its CHECK constraints / generated columns /
+                # clustering would accept writes the source never would
+                # (same metadata-travels-with-data rule as restore)
+                config={k: m.get(k) for k in mlog.CONFIG_KEYS},
             )
         finally:
-            dest._pending_stats_columns = dest._UNSET
-            dest._pending_bloom = dest._UNSET
-            dest._pending_cluster = dest._UNSET
-            dest._pending_constraints = dest._UNSET
-            dest._pending_generated = dest._UNSET
             dest._pending_op = None
         return dest
 

@@ -54,22 +54,30 @@ CHECKPOINT_INTERVAL = 16
 # the side file would not pay for its extra open.
 CHECKPOINT_PARQUET_MIN_FILES = 256
 
+# The table's opt-in feature config (Delta keeps the same properties in
+# one Metadata ``configuration`` map). Each key is present only on tables
+# that turned the feature on and carries forward on every commit until a
+# config commit clears it; a write runs a feature's code only when its
+# key is set:
+# - ``stats_columns``: columns whose per-file min/max the writers collect
+#   (manifest-level data skipping, read(stats_predicates=...))
+# - ``bloom``: Bloom sidecar config ({columns, m_bits, k, seed}); the
+#   bitmaps live NEXT TO the data files (<file>.bloom.<col>), never in
+#   the log
+# - ``cluster_by``: clustering columns (Delta's clustered-table
+#   metadata); writers and auto-maintenance default their layout to it
+# - ``constraints``: CHECK constraints {name: sql} (Delta's ADD
+#   CONSTRAINT); every data-file write enforces them row-level
+# - ``generated``: generated columns {col: sql} (Delta's GENERATED ALWAYS
+#   AS); writers materialize absent ones, checks enforce provided ones
+# The order is the order the keys appear in a commit doc.
+CONFIG_KEYS = ("stats_columns", "bloom", "cluster_by", "constraints", "generated")
+
 # scalar keys copied verbatim between snapshot and doc; the doc is
 # authoritative on reconstruction (absent key == absent in snapshot).
 # A "cdc" key left by older writers (change-file lists) is not a scalar:
 # reconstruction drops it and no reader consults it.
-_SCALARS = (
-    "base_version",
-    "ts",
-    "op",
-    "schema",
-    "stats_columns",
-    "bloom",
-    "cluster_by",
-    "constraints",
-    "generated",
-    "data_change",
-)
+_SCALARS = ("base_version", "ts", "op", "schema", *CONFIG_KEYS, "data_change")
 
 # map-valued snapshot keys diffed as <key>_put / <key>_del in delta docs
 _MAPS = ("stats", "file_meta", "dv")

@@ -39,6 +39,17 @@ from ecommerce_analytics_platform_spark.sources.evolution import (
 )
 
 
+def has_parquet(path: str) -> bool:
+    """Whether the directory ``path`` holds at least one parquet data
+    file (anywhere below it) — a parquet dir is readable iff it does."""
+    if not os.path.isdir(path):
+        return False
+    for _root, _dirs, files in os.walk(path):
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
+
+
 class Warehouse:
     """Parquet-dir table catalog with medallion load operations."""
 
@@ -51,19 +62,7 @@ class Warehouse:
         return os.path.join(self.root, *table.split("."))
 
     def exists(self, table: str) -> bool:
-        p = self.path(table)
-        if not os.path.isdir(p):
-            return False
-        # a parquet dir is readable iff it has at least one data file
-        for _root, _dirs, files in os.walk(p):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    def _catalog_name(self, table: str) -> str:
-        # flat catalog identifier ('schema.table' → 'schema__table'): keeps
-        # the metastore namespace-free while the path stays hierarchical
-        return table.replace(".", "__")
+        return has_parquet(self.path(table))
 
     # -- declared-schema sidecar (additive evolution) ----------------------
 
@@ -90,12 +89,6 @@ class Warehouse:
         os.replace(tmp, p)  # atomic swap — readers never see a torn file
 
     def read(self, table: str) -> DataFrame:
-        # bucketed tables MUST be read through the catalog — a plain
-        # parquet read has no bucket metadata, so every downstream join
-        # would shuffle the very data the bucketing pre-shuffled
-        name = self._catalog_name(table)
-        if self.spark.catalog.tableExists(name):
-            return self.spark.table(name)
         declared = self.declared_schema(table)
         if declared is not None:
             # explicit read schema = NULL back-fill for columns a file
@@ -109,46 +102,8 @@ class Warehouse:
         df: DataFrame,
         table: str,
         partition_by: list[str] | None = None,
-        bucket_by: list[str] | None = None,
-        n_buckets: int = 8,
-        sort_by: list[str] | None = None,
     ) -> None:
-        """dbt ``table`` materialization: full rebuild (SURVEY §2.1 S10).
-
-        ``bucket_by``: write the table hash-bucketed (+ sorted) on the join
-        key — the fact-fact pattern (order_items ⨝ orders on order_id) pays
-        its shuffle ONCE at write time; every later bucketed-⨝-bucketed
-        join with equal bucket counts runs with NO Exchange (pinned in
-        tests/test_plans.py). Bucketed output needs the session catalog
-        (file-name bucket metadata), so it writes as an EXTERNAL table at
-        the same warehouse path; :meth:`read` resolves through the catalog
-        automatically. Constraint: bucketing composes with full rebuilds
-        only — the incremental merge's dir-swap writes plain files, which
-        would silently invalidate bucket metadata (on a real cluster this
-        is Delta/Iceberg territory; see SCALE.md).
-        """
-        if bucket_by:
-            name = self._catalog_name(table)
-            # drop a stale catalog entry so path/metadata can't diverge
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            w = (
-                df.write.mode("overwrite")
-                .format("parquet")
-                .option("path", os.path.abspath(self.path(table)))
-                .bucketBy(n_buckets, *bucket_by)
-                .sortBy(*(sort_by or bucket_by))
-            )
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.saveAsTable(name)
-            # bucketed tables resolve through the catalog; a stale
-            # declared-schema sidecar from a previous plain write would
-            # shadow nothing, but drop it for hygiene
-            try:
-                os.unlink(self._schema_path(table))
-            except FileNotFoundError:
-                pass
-            return
+        """dbt ``table`` materialization: full rebuild (SURVEY §2.1 S10)."""
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)

@@ -147,7 +147,8 @@ def start_continuous_gold(
 ) -> StreamingQuery:
     """Clickstream NDJSON stream → per micro-batch: bronze append, silver
     merges (events + sessions), then partition-pruned recompute + commit
-    of the four metrics marts under ``gold_root``.
+    of the eight gold tables (four metrics marts and four dimensions)
+    under ``gold_root``.
 
     Requires ``staging.stg_orders`` to exist in the warehouse when
     order-derived metrics should be non-zero (load it with the batch

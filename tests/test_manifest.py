@@ -618,3 +618,93 @@ def test_detail_summarizes_table_metadata_only(spark, tmp_path):
     # time travel: the pre-delete version shows no DVs
     d0 = t.detail(version=d["version"] - 1)
     assert d0["num_deletion_vector_files"] == 0
+
+
+# key -> (config commit, value stored in the doc, detail() field, reported value)
+_CONFIG_CASES = {
+    "stats_columns": (
+        lambda t: t.set_stats_columns(["k"]), ["k"], "stats_columns", ["k"]
+    ),
+    "bloom": (
+        lambda t: t.set_bloom_columns(["k"]),
+        {"columns": ["k"], "m_bits": 1 << 17, "k": 5, "seed": 101},
+        "bloom_columns",
+        ["k"],
+    ),
+    "cluster_by": (
+        lambda t: t.set_cluster_by(["k"]), ["k"], "cluster_by", ["k"]
+    ),
+    "constraints": (
+        lambda t: t.add_check_constraint("k_pos", "k >= 0"),
+        {"k_pos": "k >= 0"},
+        "constraints",
+        {"k_pos": "k >= 0"},
+    ),
+    "generated": (
+        lambda t: t.set_generated_columns({"d": "k * 2"}),
+        {"d": "k * 2"},
+        "generated_columns",
+        {"d": "k * 2"},
+    ),
+}
+
+
+@pytest.mark.parametrize("key", mlog.CONFIG_KEYS)
+def test_config_key_round_trips(spark, tmp_path, key):
+    """Every table-config key rides the same path: a plain data commit
+    carries it forward, detail() reports it, clone_to copies it, and a
+    restore to a version before it was set drops it."""
+    set_key, stored, field, reported = _CONFIG_CASES[key]
+    t = ManifestTable(spark, str(tmp_path / "t"))
+    v_before = t.append(spark.createDataFrame([(1, 2)], ["k", "d"]))
+    set_key(t)
+    v_data = t.append(spark.createDataFrame([(2, 4)], ["k", "d"]))
+    assert t._read_doc(v_data)[key] == stored
+    assert t._read_manifest(v_data)[key] == stored
+    assert t.detail()[field] == reported
+
+    c = t.clone_to(str(tmp_path / "clone"))
+    assert c._read_manifest(c.latest_version())[key] == stored
+    assert c.detail()[field] == reported
+
+    v_restored = t.restore(v_before)
+    assert key not in t._read_manifest(v_restored)
+    assert t.detail()[field] == t.detail(version=v_before)[field]
+    assert not t.detail()[field]
+
+
+def test_unconfigured_table_runs_no_feature_code(spark, tmp_path, monkeypatch):
+    """A table with no config (the streaming gold tables) runs no
+    feature code on its commits: no stats collection, no Bloom sidecars,
+    no clustering, and no config key in any commit doc."""
+
+    def boom(*_a, **_k):
+        raise AssertionError("feature code ran on a table with no config")
+
+    for name in ("_collect_stats", "_write_bloom_sidecars", "_clustered"):
+        monkeypatch.setattr(ManifestTable, name, boom)
+
+    kpis = ManifestTable(spark, str(tmp_path / "kpis"))
+    kpis.replace_partitions(
+        spark.createDataFrame([("2024-01-01", 3)], ["date", "n"]),
+        ["date"],
+        txn_id="kpis-0",
+    )
+    users = ManifestTable(spark, str(tmp_path / "users"))
+    for batch_id, rows in enumerate([[(1, 10), (2, 20)], [(2, 21), (3, 30)]]):
+        users.merge_delete_insert(
+            spark.createDataFrame(rows, ["user_id", "n"]).withColumn(
+                "u_bucket", F.pmod(F.hash("user_id"), F.lit(16))
+            ),
+            unique_key=["user_id"],
+            partition_by=["u_bucket"],
+            txn_id=f"ul-{batch_id}",
+        )
+    assert {(r.user_id, r.n) for r in users.read().collect()} == {
+        (1, 10), (2, 21), (3, 30)
+    }
+    for t in (kpis, users):
+        for v in t._versions():
+            doc = t._read_doc(v)
+            assert not [k for k in mlog.CONFIG_KEYS if k in doc], doc
+        assert not glob.glob(os.path.join(t.path, "**", "*.bloom.*"), recursive=True)

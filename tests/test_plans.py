@@ -126,50 +126,6 @@ def test_exchange_reuse_in_sessionize(spark):
     assert n_exchanges <= 2, plan
 
 
-def test_warehouse_bucketed_fact_join_has_no_exchange(spark, tmp_path):
-    """Warehouse.overwrite(bucket_by=...) on both fact tables: the
-    order_items ⨝ orders join must run as a sort-merge join with NO
-    Exchange on either side — the write-time shuffle is the only one."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from ecommerce_analytics_platform_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    orders = spark.range(2000).select(
-        F.col("id").alias("order_id"), (F.col("id") % 97).alias("user_key")
-    )
-    items = spark.range(6000).select(
-        (F.col("id") % 2000).alias("order_id"), (F.col("id") % 40).alias("product_key")
-    )
-    try:
-        wh.overwrite(orders, "marts.fact_orders_b", bucket_by=["order_id"])
-        wh.overwrite(items, "marts.fact_order_items_b", bucket_by=["order_id"])
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = wh.read("marts.fact_order_items_b").join(
-                wh.read("marts.fact_orders_b"), "order_id"
-            )
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                joined.explain()
-            plan = buf.getvalue()
-            assert "SortMergeJoin" in plan
-            assert "Exchange hashpartitioning" not in plan
-            assert joined.count() == 6000
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        # unbucketed tables still read as plain parquet dirs
-        wh.overwrite(orders, "marts.plain_t")
-        assert wh.read("marts.plain_t").count() == 2000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS marts__fact_orders_b")
-        spark.sql("DROP TABLE IF EXISTS marts__fact_order_items_b")
-
-
 def test_shipping_priority_broadcasts_and_takeordered(spark):
     """Q3 analog: customer side broadcast; top-10 as TakeOrderedAndProject
     (per-partition top-k + driver merge), never a global sort."""
