@@ -137,11 +137,24 @@ def _toposort(specs: list[ModelSpec]) -> list[ModelSpec]:
     return done
 
 
+_BY_NAME = {s.name: s for s in MODELS}
+
+
+def build(name: str, inputs: dict[str, DataFrame]) -> DataFrame:
+    """Model ``name`` as a lazy DataFrame. Tables named in ``inputs`` are
+    used as they are; every other dependency is built with its
+    :class:`ModelSpec` builder and memoized in ``inputs``."""
+    if name not in inputs:
+        spec = _BY_NAME[name]
+        inputs[name] = spec.builder(*(build(d, inputs) for d in spec.deps))
+    return inputs[name]
+
+
 def merge_model(wh: Warehouse, name: str, df: DataFrame) -> None:
     """delete+insert ``df`` into model ``name`` with its declared unique key
     and partition layout — the merge the stream's micro-batches share with
     the batch incremental run."""
-    spec = next(m for m in MODELS if m.name == name)
+    spec = _BY_NAME[name]
     merge_delete_insert(wh.spark, wh.path(name), df, spec.unique_key, spec.partition_by)
 
 

@@ -182,9 +182,6 @@ class ManifestTable:
         # operation label for commits made by the current public call
         # (set by the @_labeled decorators; recorded as the doc's "op")
         self._pending_op: str | None = None
-        # row-preservation flag for the NEXT commit (replace_files
-        # data_change=False sets it around its publish; default True)
-        self._pending_data_change = True
         # reconstructed-snapshot cache (manifest docs are immutable once
         # published — vacuum's checkpoint rewrite is content-equivalent —
         # so caching by version is safe); bounded FIFO
@@ -251,7 +248,9 @@ class ManifestTable:
         v = self.latest_version()
         return v is not None and txn_id in self._read_manifest(v).get("txns", [])
 
-    def _publish(self, apply_fn, config: dict | None = None) -> int:
+    def _publish(
+        self, apply_fn, config: dict | None = None, data_change: bool = True
+    ) -> int:
         """Optimistic-concurrency commit loop.
 
         ``apply_fn(base_version, base_manifest | None) -> (files, txns)``
@@ -268,7 +267,8 @@ class ManifestTable:
 
         ``config`` overrides the base's table config
         (``mlog.CONFIG_KEYS``) for the keys it names; every other key
-        carries forward."""
+        carries forward. ``data_change=False`` stamps the commit as
+        row-preserving (see :meth:`replace_files`)."""
         config = config or {}
         self.store.ensure_dir(self.manifest_dir)
         while True:
@@ -344,7 +344,7 @@ class ManifestTable:
                 # the snapshot's declared read schema (additive evolution
                 # — see sources/evolution.py); absent in legacy manifests
                 doc["schema"] = schema_json
-            if self._pending_data_change is False:
+            if not data_change:
                 # Delta-style dataChange=false: this commit preserves the
                 # logical row multiset (compaction / clustering / DV
                 # materialization) — CDF readers skip it at O(metadata)
@@ -1752,11 +1752,7 @@ class ManifestTable:
             # — the exact silent loss evolution.py exists to prevent)
             return kept + staged[0], txns, self._rebased_schema_json(m, union)
 
-        self._pending_data_change = data_change
-        try:
-            return self._publish(apply)
-        finally:
-            self._pending_data_change = True
+        return self._publish(apply, data_change=data_change)
 
     def _check_partition_layout(self, partition_by: list[str] | None) -> None:
         """Appending UNPARTITIONED files into a hive-partitioned table (or
@@ -2327,6 +2323,10 @@ class ManifestTable:
         m = self._read_manifest(v)
         files = m["files"]
         if not files:
+            if m.get("schema"):
+                # a data commit that wrote no rows still declares its
+                # columns: the snapshot reads as an empty table
+                return self.spark.createDataFrame([], StructType.fromJson(m["schema"]))
             raise ValueError(f"manifest v{v} lists no files")
         if partition_values:
             files = self._prune_by_partition_values(files, partition_values)
