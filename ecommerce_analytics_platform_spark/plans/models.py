@@ -397,14 +397,11 @@ def metrics_daily_kpis(
             F.coalesce("orders", F.lit(0)).alias("orders"),
             F.coalesce("revenue", F.lit(0.0)).alias("revenue"),
             F.coalesce("avg_order_value", F.lit(0.0)).alias("avg_order_value"),
-            F.when(F.col("sessions") > 0, F.col("orders") / F.col("sessions"))
-            .otherwise(F.lit(0.0))
+            # a date with sessions and no orders reads 0.0, not NULL
+            # (deviation 6, SURVEY §2.10)
+            F.coalesce(F.col("orders") / F.col("sessions"), F.lit(0.0))
             .alias("conversion_rate"),
-            F.when(
-                F.col("sessions") > 0,
-                F.col("sessions_with_orders") / F.col("sessions"),
-            )
-            .otherwise(F.lit(0.0))
+            F.coalesce(F.col("sessions_with_orders") / F.col("sessions"), F.lit(0.0))
             .alias("sessions_with_order_pct"),
         )
     )

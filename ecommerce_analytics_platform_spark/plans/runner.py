@@ -5,8 +5,9 @@ semantics and testability").
 
 A :class:`ModelSpec` = builder + deps + materialization config — the
 equivalent of a dbt model file + its ``{{ config(...) }}`` block
-(reference dbt_project/dbt_project.yml:26-52). ``run_models`` topologically
-executes the DAG against a :class:`Warehouse`; incremental models get the
+(reference dbt_project/dbt_project.yml:26-52). ``run_models`` executes the
+DAG against a :class:`Warehouse` with :func:`run_dag`, each model as soon
+as its deps are written (dbt's ``threads``); incremental models get the
 1-day sliding lookback + delete+insert merge (operators/incremental.py)
 matching the reference's declared configs; ``full_refresh=True`` matches
 ``dbt run --full-refresh`` (which the shipped orchestration always uses for
@@ -19,10 +20,14 @@ relationships (FK containment), expression invariants — executed by
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+from collections.abc import Callable, Iterable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from typing import TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_analytics_platform_spark.operators.incremental import (
@@ -31,6 +36,8 @@ from ecommerce_analytics_platform_spark.operators.incremental import (
 )
 from ecommerce_analytics_platform_spark.plans import models as M
 from ecommerce_analytics_platform_spark.sources.warehouse import Warehouse
+
+T = TypeVar("T")
 
 
 @dataclass
@@ -116,25 +123,80 @@ MODELS: list[ModelSpec] = [
 ]
 
 
-def _toposort(specs: list[ModelSpec]) -> list[ModelSpec]:
-    by_name = {s.name: s for s in specs}
-    done: list[ModelSpec] = []
-    seen: set[str] = set()
+def _cycle(unmet: dict[str, set[str]]) -> list[str]:
+    """A dependency cycle among ``unmet`` (task -> deps not yet done),
+    when every task in it still waits on another one in it."""
+    path = [min(unmet)]
+    while path[-1] not in path[:-1]:
+        path.append(min(unmet[path[-1]]))
+    return path[path.index(path[-1]):]
 
-    def visit(s: ModelSpec, stack: tuple[str, ...] = ()):
-        if s.name in seen:
-            return
-        if s.name in stack:
-            raise ValueError(f"cycle: {stack} -> {s.name}")
-        for d in s.deps:
-            if d in by_name:
-                visit(by_name[d], stack + (s.name,))
-        seen.add(s.name)
-        done.append(s)
 
-    for s in specs:
-        visit(s)
-    return done
+def run_dag(
+    spark: SparkSession,
+    phase: str,
+    tasks: dict[str, Callable[[], T]],
+    deps: dict[str, Iterable[str]] | None = None,
+) -> dict[str, T]:
+    """Run ``tasks`` concurrently, each as soon as its ``deps`` (names of
+    other tasks) have finished — dbt's ``threads`` — and return their
+    results by name.
+
+    The pool has ``defaultParallelism`` threads, so jobs of independent
+    tasks fill task slots another task's driver-side work leaves idle
+    (Spark schedules jobs from several threads). Each task's jobs carry
+    the tag and description ``<phase>:<name>``. The first failure is
+    raised as the task's own exception after the running tasks end: no
+    task starts after it, and the running ones have their jobs cancelled
+    by tag. A dependency cycle raises ``ValueError`` naming it.
+    """
+    unmet = {name: set((deps or {}).get(name, ())) for name in tasks}
+    unknown = {d for ds in unmet.values() for d in ds} - tasks.keys()
+    if unknown:
+        raise ValueError(f"unknown dependencies: {sorted(unknown)}")
+    sc = spark.sparkContext
+    results: dict[str, T] = {}
+    failure: BaseException | None = None
+    running: dict[Future, str] = {}
+    with ThreadPoolExecutor(max_workers=max(1, sc.defaultParallelism)) as pool:
+        while unmet or running:
+            for name in [n for n, ds in unmet.items() if not ds and failure is None]:
+                del unmet[name]
+                running[pool.submit(_tagged(spark, f"{phase}:{name}", tasks[name]))] = name
+            if not running:
+                if failure is None:
+                    raise ValueError(f"dependency cycle: {' -> '.join(_cycle(unmet))}")
+                break
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                name = running.pop(fut)
+                if fut.exception() is None:
+                    results[name] = fut.result()
+                    for ds in unmet.values():
+                        ds.discard(name)
+                elif failure is None:
+                    failure = fut.exception()
+                    for other in running.values():
+                        sc.cancelJobsWithTag(f"{phase}:{other}")
+    if failure is not None:
+        raise failure
+    return results
+
+
+def _tagged(spark: SparkSession, tag: str, fn: Callable[[], T]) -> Callable[[], T]:
+    """``fn`` with the caller's Spark local properties (job group, SQL
+    execution) and the job tag/description ``tag`` in its pool thread.
+    Wrapped per task: the wrapper clones the properties once, and tags
+    are added to that clone."""
+
+    @inheritable_thread_target(spark)
+    def run() -> T:
+        sc = spark.sparkContext
+        sc.addJobTag(tag)
+        sc.setJobDescription(tag)
+        return fn()
+
+    return run
 
 
 _BY_NAME = {s.name: s for s in MODELS}
@@ -164,20 +226,22 @@ def run_models(
     select: list[str] | None = None,
     full_refresh: bool = False,
 ) -> dict[str, int]:
-    """Execute the DAG; returns row counts per materialized model.
+    """Execute the DAG with :func:`run_dag` (a model starts once its
+    deps are written); returns row counts per materialized model, read
+    from the written files' parquet footers.
 
-    ``select`` limits to the named models (deps must already exist —
-    mirrors ``dbt run --select``). ``full_refresh`` rebuilds incrementals
-    from scratch (reference dbt_runner.py:59-63 behavior for staging).
+    ``select`` limits to the named models (deps outside it must already
+    exist — mirrors ``dbt run --select``). ``full_refresh`` rebuilds
+    incrementals from scratch (reference dbt_runner.py:59-63 behavior for
+    staging).
 
     Incremental models are built from full inputs; the lookback then picks
     output rows, so a picked session is rolled up from its full history.
     """
-    specs = _toposort(specs or MODELS)
-    if select:
-        specs = [s for s in specs if s.name in select]
-    counts: dict[str, int] = {}
-    for s in specs:
+    specs = [s for s in specs or MODELS if not select or s.name in select]
+    names = {s.name for s in specs}
+
+    def materialize(s: ModelSpec) -> int:
         df = s.builder(*(wh.read(d) for d in s.deps))
         incremental = (
             s.materialized == "incremental" and not full_refresh and wh.exists(s.name)
@@ -192,8 +256,14 @@ def run_models(
             )
         else:
             wh.overwrite(df, s.name, partition_by=s.partition_by)
-        counts[s.name] = wh.read(s.name).count()
-    return counts
+        return wh.row_count(s.name)
+
+    counts = run_dag(
+        wh.spark, "model",
+        {s.name: functools.partial(materialize, s) for s in specs},
+        {s.name: [d for d in s.deps if d in names] for s in specs},
+    )
+    return {s.name: counts[s.name] for s in specs}
 
 
 # ---------------------------------------------------------------------------
@@ -289,23 +359,12 @@ def run_freshness(wh: Warehouse, now=None) -> dict[str, str]:
 
 def run_tests(wh: Warehouse) -> dict[str, int]:
     """Port of the schema.yml test contract; returns failures per test id
-    (all zeros = green). Mirrors ``dbt test`` at dbt_runner.py:66-69,88-91."""
-    t: dict[str, int] = {}
+    (all zeros = green). Mirrors ``dbt test`` at dbt_runner.py:66-69,88-91;
+    the tests are independent, so :func:`run_dag` runs them all at once."""
     stg_ev = wh.read("staging.stg_clickstream_events")
-    t["stg_events.event_id.not_null"] = assert_not_null(stg_ev, ["event_id"])["event_id"]
-    t["stg_events.event_id.unique"] = assert_unique(stg_ev, ["event_id"])
     stg_sess = wh.read("staging.stg_clickstream_sessions")
-    t["stg_sessions.session_id.unique"] = assert_unique(stg_sess, ["session_id"])
-    t["stg_sessions.duration_nonneg"] = assert_expression(stg_sess, "session_duration_sec >= 0")
     stg_ord = wh.read("staging.stg_orders")
-    t["stg_orders.order_id.unique"] = assert_unique(stg_ord, ["order_id"])
-    t["stg_orders.total_nonneg"] = assert_expression(
-        stg_ord, "order_total_amount is null or order_total_amount >= 0"
-    )
     stg_items = wh.read("staging.stg_order_items")
-    t["stg_order_items.pk.unique"] = assert_unique(stg_items, ["order_id", "product_id"])
-    t["stg_order_items.quantity_pos"] = assert_expression(stg_items, "quantity > 0")
-
     fe = wh.read("marts.fact_events")
     fo = wh.read("marts.fact_orders")
     fs = wh.read("marts.fact_sessions")
@@ -314,26 +373,42 @@ def run_tests(wh: Warehouse) -> dict[str, int]:
     du = wh.read("marts.dim_users")
     dp = wh.read("marts.dim_products")
     dsc = wh.read("marts.dim_session_context")
-    t["fact_events.event_id.unique"] = assert_unique(fe, ["event_id"])
-    t["fact_events.date_fk"] = assert_relationship(fe, "event_date", dd, "date")
-    t["fact_events.user_fk"] = assert_relationship(fe, "user_id", du, "user_id")
-    t["fact_events.session_fk"] = assert_relationship(fe, "session_id", dsc, "session_id")
-    t["fact_sessions.session_id.unique"] = assert_unique(fs, ["session_id"])
-    t["fact_sessions.user_fk"] = assert_relationship(fs, "user_id", du, "user_id")
-    t["fact_sessions.revenue_nonneg"] = assert_expression(fs, "revenue_in_session >= 0")
-    t["fact_orders.order_id.unique"] = assert_unique(fo, ["order_id"])
-    t["fact_orders.user_fk"] = assert_relationship(fo, "user_id", du, "user_id")
-    t["fact_order_items.pk.unique"] = assert_unique(foi, ["order_id", "product_id"])
-    t["fact_order_items.order_fk"] = assert_relationship(foi, "order_id", fo, "order_id")
-    t["fact_order_items.product_fk"] = assert_relationship(foi, "product_id", dp, "product_id")
-    t["fact_order_items.quantity_pos"] = assert_expression(foi, "quantity > 0")
-
     mul = wh.read("marts.metrics_user_lifecycle")
-    t["user_lifecycle.user_fk"] = assert_relationship(mul, "user_id", du, "user_id")
-    t["user_lifecycle.days_nonneg"] = assert_expression(
-        mul, "days_to_first_purchase is null or days_to_first_purchase >= 0"
-    )
     mpp = wh.read("marts.metrics_product_performance_daily")
-    t["product_perf.product_fk"] = assert_relationship(mpp, "product_id", dp, "product_id")
-    t["product_perf.revenue_nonneg"] = assert_expression(mpp, "product_revenue >= 0")
-    return t
+    tests = {
+        "stg_events.event_id.not_null": lambda: assert_not_null(stg_ev, ["event_id"])["event_id"],
+        "stg_events.event_id.unique": lambda: assert_unique(stg_ev, ["event_id"]),
+        "stg_sessions.session_id.unique": lambda: assert_unique(stg_sess, ["session_id"]),
+        "stg_sessions.duration_nonneg": lambda: assert_expression(
+            stg_sess, "session_duration_sec >= 0"
+        ),
+        "stg_orders.order_id.unique": lambda: assert_unique(stg_ord, ["order_id"]),
+        "stg_orders.total_nonneg": lambda: assert_expression(
+            stg_ord, "order_total_amount is null or order_total_amount >= 0"
+        ),
+        "stg_order_items.pk.unique": lambda: assert_unique(stg_items, ["order_id", "product_id"]),
+        "stg_order_items.quantity_pos": lambda: assert_expression(stg_items, "quantity > 0"),
+        "fact_events.event_id.unique": lambda: assert_unique(fe, ["event_id"]),
+        "fact_events.date_fk": lambda: assert_relationship(fe, "event_date", dd, "date"),
+        "fact_events.user_fk": lambda: assert_relationship(fe, "user_id", du, "user_id"),
+        "fact_events.session_fk": lambda: assert_relationship(fe, "session_id", dsc, "session_id"),
+        "fact_sessions.session_id.unique": lambda: assert_unique(fs, ["session_id"]),
+        "fact_sessions.user_fk": lambda: assert_relationship(fs, "user_id", du, "user_id"),
+        "fact_sessions.revenue_nonneg": lambda: assert_expression(fs, "revenue_in_session >= 0"),
+        "fact_orders.order_id.unique": lambda: assert_unique(fo, ["order_id"]),
+        "fact_orders.user_fk": lambda: assert_relationship(fo, "user_id", du, "user_id"),
+        "fact_order_items.pk.unique": lambda: assert_unique(foi, ["order_id", "product_id"]),
+        "fact_order_items.order_fk": lambda: assert_relationship(foi, "order_id", fo, "order_id"),
+        "fact_order_items.product_fk": lambda: assert_relationship(
+            foi, "product_id", dp, "product_id"
+        ),
+        "fact_order_items.quantity_pos": lambda: assert_expression(foi, "quantity > 0"),
+        "user_lifecycle.user_fk": lambda: assert_relationship(mul, "user_id", du, "user_id"),
+        "user_lifecycle.days_nonneg": lambda: assert_expression(
+            mul, "days_to_first_purchase is null or days_to_first_purchase >= 0"
+        ),
+        "product_perf.product_fk": lambda: assert_relationship(mpp, "product_id", dp, "product_id"),
+        "product_perf.revenue_nonneg": lambda: assert_expression(mpp, "product_revenue >= 0"),
+    }
+    results = run_dag(wh.spark, "test", tests)
+    return {name: results[name] for name in tests}

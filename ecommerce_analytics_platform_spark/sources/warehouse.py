@@ -15,7 +15,8 @@ Load semantics ported:
   ``WHERE ingest_date NOT IN (SELECT DISTINCT ingest_date FROM target)``)
   → left-anti join here. A date that later receives more landing data is
   NOT topped up — reference semantics preserved (SURVEY §3.2).
-- A11 row-count validation (spark_jobs/helper_functions.py:1-7).
+- A11 row-count validation (spark_jobs/helper_functions.py:1-7), counted
+  from the parquet footers (:meth:`Warehouse.row_count`).
 
 Scale notes: the anti-join's build side is the *distinct ingest_dates* of
 the target (tiny — one row per day), so Catalyst broadcasts it; the landing
@@ -172,10 +173,32 @@ class Warehouse:
             df = df.join(F.broadcast(seen), on=date_col, how="left_anti")
         self.append(df, table, partition_by=[date_col])
 
+    def row_count(self, table: str) -> int:
+        """Rows of ``table`` from parquet footers alone (no Spark job):
+        ``num_rows`` summed over the files Spark's reader lists. Like
+        Spark, names starting with ``_`` or ``.`` are skipped, except
+        partition directories (names with ``=``)."""
+        import pyarrow.parquet as pq
+
+        def listed(name: str) -> bool:
+            return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+        def missing(err: OSError):
+            raise err
+
+        n = 0
+        for root, dirs, files in os.walk(self.path(table), onerror=missing):
+            dirs[:] = [d for d in dirs if listed(d)]
+            n += sum(
+                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+                for f in files if listed(f)
+            )
+        return n
+
     def validate_table(self, table: str, min_rows: int = 1) -> int:
         """Row-count smoke validation (reference
         spark_jobs/helper_functions.py:1-7, called bronze.py:85,88)."""
-        n = self.read(table).count()
+        n = self.row_count(table)
         if n < min_rows:
             raise AssertionError(f"{table}: expected >= {min_rows} rows, got {n}")
         return n

@@ -40,11 +40,20 @@ the batch truth by construction.
   re-delivered foreachBatch a no-op, the same guarantee Delta's
   ``txnAppId``/``txnVersion`` provides. The silver merge underneath is
   idempotent by unique key, so replayed batches converge state-identically.
+- **Concurrent commits**: the commits' DataFrames are planned first,
+  serially, because ``runner.build`` memoizes shared inputs into one
+  plain dict, which is not thread-safe. Then ``runner.run_dag`` runs the
+  commits of the seven tables and dim_products at once (Spark schedules
+  jobs from several threads). Each commit goes to its own
+  :class:`ManifestTable`, so no two commits race; a failed commit fails
+  the batch, and the replay skips the commits that landed (txn ids).
 - **Orders are batch-side**: the reference ingests orders in batch
   (batch_ingest.py) while clickstream streams; gold joins the CURRENT
-  ``staging.stg_orders`` each micro-batch. Re-running the loop after an
-  orders reload brings order-derived columns current. dim_products, which
-  only orders feed, is keyed to the orders snapshot instead of the batch.
+  ``staging.stg_orders`` each micro-batch. After an orders reload, a
+  later micro-batch brings the order-derived columns current only for
+  the keys its events touch; rows no later event touches keep the old
+  orders (ROADMAP item 8). dim_products, which only orders feed, is keyed
+  to the orders snapshot instead of the batch, so it catches up in full.
 
 Convergence to the batch truth is asserted in tests/test_gold_stream.py.
 """
@@ -60,7 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ecommerce_analytics_platform_spark.plans.models import SESSION_BUCKETS
-from ecommerce_analytics_platform_spark.plans.runner import build, merge_model
+from ecommerce_analytics_platform_spark.plans.runner import build, merge_model, run_dag
 from ecommerce_analytics_platform_spark.sources.manifest import ManifestTable
 from ecommerce_analytics_platform_spark.sources.warehouse import Warehouse
 from ecommerce_analytics_platform_spark.streaming.continuous_pipeline import (
@@ -246,18 +255,22 @@ def start_continuous_gold(
             ),
         })
 
+        # plans first, serially: ``build`` memoizes into ``inputs``, a
+        # plain dict; then the commits run at once, each on its own table
+        commits = {}
         for g in EVENT_GOLD:
             keys = touched[g.key] | new_dates.get(g.table, set())
             if not keys:
                 continue
-            df = g.pick(inputs, keys)
-            txn_id = f"{g.table}-{batch_id}"
+            df, t, txn_id = g.pick(inputs, keys), gold(g.table), f"{g.table}-{batch_id}"
             if g.bucket is None:
-                gold(g.table).replace_partitions(df, ["date"], txn_id=txn_id)
+                commits[g.table] = functools.partial(
+                    t.replace_partitions, df, ["date"], txn_id=txn_id
+                )
             else:
                 col, n = g.bucket
-                gold(g.table).merge_delete_insert(
-                    df.withColumn(col, _bucket(g.key, n)),
+                commits[g.table] = functools.partial(
+                    t.merge_delete_insert, df.withColumn(col, _bucket(g.key, n)),
                     unique_key=[g.key], partition_by=[col], txn_id=txn_id,
                 )
 
@@ -271,10 +284,12 @@ def start_continuous_gold(
                 dp = build("marts.dim_products", inputs).withColumn(
                     "p_bucket", _bucket("product_id", GOLD_BUCKETS)
                 )
-                dp_t.merge_delete_insert(
-                    dp, unique_key=["product_id"], partition_by=["p_bucket"],
-                    txn_id=fp_txn,
+                commits["dim_products"] = functools.partial(
+                    dp_t.merge_delete_insert, dp, unique_key=["product_id"],
+                    partition_by=["p_bucket"], txn_id=fp_txn,
                 )
+
+        run_dag(spark, "gold", commits)
 
     return start_clickstream_stream(spark, raw_dir, checkpoint_dir, process_batch, available_now)
 

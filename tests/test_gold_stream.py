@@ -208,6 +208,38 @@ def test_kpis_count_an_order_dated_outside_the_recomputed_dates(spark, tmp_path)
     assert day["sessions_with_order_pct"] == 0.5
 
 
+def test_kpis_ratios_read_zero_on_a_date_without_orders(spark, tmp_path):
+    """2026-01-10 has a session and no orders; 2026-01-11 a session with
+    its order. The orderless date reads conversion_rate and
+    sessions_with_order_pct 0.0 beside orders 0 (the reference's
+    ``o.orders / s.sessions`` gives NULL there: deviation 6, SURVEY §2.10),
+    in the streamed table and in the batch recompute alike."""
+    wh_root, raw, gold_root = (str(tmp_path / d) for d in ("wh", "raw", "gold"))
+    wh = Warehouse(spark, wh_root)
+    _stage_orders(spark, wh, [{
+        "order_id": "O2", "session_id": "S2", "user_id": "U2",
+        "order_status": "completed",
+        "items": [{"product_id": "P1", "quantity": 1, "price": 10.0}],
+        "order_time": "2026-01-11 10:30:00", "ingest_time": "2026-01-11 10:31:00",
+    }], str(tmp_path / "orders"))
+    files = [[
+        _event("E1-0", "S1", "U1", "2026-01-10 12:00:00"),
+        _event("E2-0", "S2", "U2", "2026-01-11 10:00:00"),
+    ]]
+    _stream_files(spark, files, raw, wh_root, gold_root, str(tmp_path / "ckpt"))
+
+    cols = ["date", "sessions", "orders", "conversion_rate", "sessions_with_order_pct"]
+    want = [
+        (datetime.date(2026, 1, 10), 1, 0, 0.0, 0.0),
+        (datetime.date(2026, 1, 11), 1, 1, 1.0, 1.0),
+    ]
+    stream = ManifestTable(spark, os.path.join(gold_root, "metrics_daily_kpis")).read()
+    batch = _truth(spark, raw, wh.read("staging.stg_orders"))["metrics_daily_kpis"]
+    for side, df in (("stream", stream), ("batch", batch)):
+        got = sorted(tuple(r) for r in df.select(*cols).collect())
+        assert got == want, side
+
+
 def test_gold_without_orders_staging_matches_orderless_batch(spark, tmp_path):
     """With no ``staging.stg_orders`` the stream builds gold over the typed
     empty stand-in: the seven event-driven tables equal the batch truth
