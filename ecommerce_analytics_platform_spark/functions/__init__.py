@@ -1,28 +1,4 @@
-from ecommerce_analytics_platform_spark.functions.compat import (  # noqa: F401
-    dow_sunday0,
-    epoch_seconds_between,
-    is_weekend,
-    minhash_seeds,
-    multmod61,
-    portable_hash60,
-    seeded_hash60,
-)
-from ecommerce_analytics_platform_spark.functions.multimodal import (  # noqa: F401
-    attach_media_metadata,
-    audio_features,
-    decode_image_features,
-    resize_images,
-    sample_video_frames,
-)
-from ecommerce_analytics_platform_spark.functions.text import (  # noqa: F401
-    char_ngrams,
-    doc_fingerprint,
-    language_scores,
-    minhash_struct,
-    predicted_lang,
-    quality_features,
-    simhash64,
-    token_count,
-    tokens,
-    word_shingles,
-)
+"""Cross-engine-portable column functions: date parts and hashes
+(``compat``), text statistics (``text``), media decoding (``codecs``,
+``jpeg``, ``multimodal``). Import each from its own module; the package
+re-exports nothing."""

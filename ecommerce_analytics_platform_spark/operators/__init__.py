@@ -1,59 +1,4 @@
-from ecommerce_analytics_platform_spark.operators.asof import asof_join  # noqa: F401
-from ecommerce_analytics_platform_spark.operators.calendar import (  # noqa: F401
-    build_dim_date,
-    date_spine,
-)
-from ecommerce_analytics_platform_spark.operators.dedup import (  # noqa: F401
-    dedup_exact,
-    dedup_latest,
-    dedup_latest_agg,
-    jaccard_ngram_pairs,
-    minhash_lsh_pairs,
-)
-from ecommerce_analytics_platform_spark.operators.export import (  # noqa: F401
-    read_shards,
-    write_shards,
-)
-from ecommerce_analytics_platform_spark.operators.corpus import (  # noqa: F401
-    balanced_sample,
-    inverted_index,
-    ngram_overlap,
-    pagerank_exact,
-    span_dedup,
-    token_budget_sample,
-    token_zipf_stats,
-)
-from ecommerce_analytics_platform_spark.operators.dedup import (  # noqa: F401
-    connected_components,
-    connected_components_star,
-    dedup_against_corpus,
-    lsh_band_buckets,
-    lsh_oversized_docs,
-    neardup_against_corpus,
-)
-from ecommerce_analytics_platform_spark.operators.incremental import (  # noqa: F401
-    lookback_filter,
-    merge_delete_insert,
-    recover_swap,
-    swap_into_place,
-)
-from ecommerce_analytics_platform_spark.operators.rangejoin import (  # noqa: F401
-    range_join_buckets,
-)
-from ecommerce_analytics_platform_spark.operators.sessionize import (  # noqa: F401
-    rollup_sessions,
-    sessionize_by_gap,
-)
-from ecommerce_analytics_platform_spark.operators.similarity import (  # noqa: F401
-    cosine_neardup_pairs,
-    cosine_topk_blas,
-    cosine_topk_bruteforce,
-    int8_topk,
-    ivf_topk,
-    lsh_bucketed_topk,
-    lsh_neardup_pairs,
-)
-from ecommerce_analytics_platform_spark.operators.skew import (  # noqa: F401
-    salted_agg,
-    salted_join,
-)
+"""Relational operators: dedup, sessionization, calendar, incremental
+materialization, similarity search and the registry's analytics. Import
+each from its own module; the package re-exports nothing, so importing one
+operator does not load the others."""

@@ -533,41 +533,3 @@ def prune_files_for_key(
     )
     return sorted(r["file"] for r in hits.collect())
 
-
-def prune_files_for_keys(
-    index: DataFrame,
-    values: list,
-    m_bits: int = 1 << 14,
-    k: int = 4,
-    seed: int = 101,
-) -> list[str]:
-    """Multi-key variant of :func:`prune_files_for_key`: files that MAY
-    contain ANY of ``values`` (a file survives iff for SOME key all of
-    that key's bit positions are set in the file's Bloom). The lookup
-    values hash driver-side (bounded list — the streaming-index caller
-    caps it) and ship as one small broadcastable relation; the index
-    aggregation is one bounded groupBy. No false negatives per key, so
-    the union has none either."""
-    spark = index.sparkSession
-    rows = []
-    need = []
-    for i, v in enumerate(values):
-        pos = sorted(set(_py_positions(v, m_bits, k, seed)))
-        need.append((i, len(pos)))
-        rows += [(i, p) for p in pos]
-    if not rows:
-        return []
-    from ecommerce_analytics_platform_spark.session import literal_df
-
-    want = literal_df(spark, rows, "key_id int, pos long")
-    need_df = literal_df(spark, need, "key_id int, need int")
-    hits = (
-        index.join(want, "pos")
-        .groupBy("file", "key_id")
-        .agg(F.countDistinct("pos").alias("n"))
-        .join(need_df, "key_id")
-        .filter(F.col("n") == F.col("need"))
-        .select("file")
-        .distinct()
-    )
-    return sorted(r["file"] for r in hits.collect())

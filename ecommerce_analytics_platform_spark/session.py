@@ -29,52 +29,37 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    cluster: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's tuned defaults.
 
     ``shuffle_partitions`` defaults to 2× cores locally; on a real cluster
     set it to ~2-3× total executor cores (AQE coalesces the excess), or
     rely on ``spark.sql.adaptive.coalescePartitions`` entirely.
-
-    ``cluster=True`` = running under spark-submit with
-    ``conf/spark-scale.conf``: master, memory and shuffle sizing come from
-    the submit environment (never overridden here); only the semantic
-    configs the engine REQUIRES (UTC, timestamp type, overwrite mode,
-    Arrow) are pinned, and only the cluster-agnostic optimizer defaults
-    are applied.
     """
     cores = _default_parallelism()
-    if cluster:
-        builder = SparkSession.builder.appName(app_name)
-    else:
-        # SPARK_GRAFT_MASTER lets the test/parity harness run the SAME
-        # code under local-cluster[n,c,mem] — real executor processes
-        # (serialization, broadcast transport, shuffle fetch) that
-        # single-JVM local mode hides.
-        builder = (
-            SparkSession.builder.appName(app_name)
-            .master(master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]"))
-            .config(
-                "spark.sql.shuffle.partitions",
-                str(shuffle_partitions or max(2 * cores, 32)),
-            )
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-            .config("spark.ui.enabled", "false")
-            # Executor Python workers must import this package. Single-JVM
-            # local mode hides the need (workers inherit the driver's cwd);
-            # local-cluster / standalone executors launch elsewhere and
-            # every mapInPandas UDF dies with ModuleNotFoundError (found by
-            # the r6 local-cluster parity run). Real clusters ship a zip
-            # via --py-files (deploy.py); for local modes the repo root on
-            # the executors' PYTHONPATH is the equivalent.
-            .config(
-                "spark.executorEnv.PYTHONPATH",
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            )
-        )
+    # SPARK_GRAFT_MASTER lets the test/parity harness run the SAME
+    # code under local-cluster[n,c,mem] — real executor processes
+    # (serialization, broadcast transport, shuffle fetch) that
+    # single-JVM local mode hides.
     builder = (
-        builder
+        SparkSession.builder.appName(app_name)
+        .master(master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]"))
+        .config(
+            "spark.sql.shuffle.partitions",
+            str(shuffle_partitions or max(2 * cores, 32)),
+        )
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.ui.enabled", "false")
+        # Executor Python workers must import this package. Single-JVM
+        # local mode hides the need (workers inherit the driver's cwd);
+        # local-cluster / standalone executors launch elsewhere and
+        # every mapInPandas UDF dies with ModuleNotFoundError (found by
+        # the r6 local-cluster parity run). The repo root on the
+        # executors' PYTHONPATH makes the package importable there.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -83,9 +68,6 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # opt-in (Spark 4): predicate pushdown INTO Python DataSources —
-        # sources/pysource.py absorbs event_type filters at generation time
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # INT96 (Spark's legacy default) carries no parquet footer min/max
         # stats, silently disabling row-group pruning on timestamp cluster
         # keys (see sources/layout.py) — write annotated int64 micros
@@ -100,9 +82,9 @@ def get_spark(
         # task — 6.6 s of a 1.07 s query's 29 s task time on a 0.85 MB
         # shuffle. The sort writer streams one spill file per task: same
         # micro-bench dropped from 6,029 ms to 15 ms summed shuffle-write
-        # time (guide §2.1/§2.3). Production configs never hit bypass
-        # anyway (conf/spark-scale.conf sets 2000 > the 200 threshold), so
-        # this also makes local plans use the SAME writer as the cluster.
+        # time (guide §2.1/§2.3). Cluster-sized shuffles (more than the
+        # 200-partition threshold) never hit bypass anyway, so this also
+        # makes local plans use the SAME writer as a cluster.
         .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         # Let AQE re-plan (coalesce) reads OVER CACHED relations. Off by
         # default because changing a cached plan's output partitioning can
@@ -228,15 +210,6 @@ def literal_df(spark: SparkSession, rows, schema: str):
         return out
     except Exception:  # noqa: BLE001 — conversion edge: keep the exact path
         return spark.createDataFrame(rows, schema)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the driver testdata parquet tables as a dict of DataFrames."""
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
 
 
 # ---------------------------------------------------------------------------

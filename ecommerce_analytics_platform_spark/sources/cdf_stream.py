@@ -5,9 +5,9 @@ gives batch version diffs, but incremental consumers (gold refreshers, index
 maintainers) had to hand-roll foreachBatch polling. This module closes the
 loop: ``spark.readStream.format("manifest_cdf").option("path", t.path)``
 streams the table's row-level deltas with **offsets = manifest versions** —
-the Spark 4 Python DataSource streaming API (same machinery as
-sources/pysource.py, but the full ``DataSourceStreamReader`` so change rows
-are produced ON EXECUTORS, one task per changed file in the common case).
+the Spark 4 Python DataSource streaming API (the full
+``DataSourceStreamReader``, so change rows are produced ON EXECUTORS, one
+task per changed file in the common case).
 
 Contract (mirrors Delta's CDF streaming read):
 
